@@ -221,6 +221,8 @@ def synthetic_stream_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from pyspark.sql import functions as F
 
+    from ..streaming.windows import _drain_confs
+
     del sf_dir
     register_synthetic_stream(spark)
     stream = (
@@ -235,11 +237,7 @@ def synthetic_stream_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(F.col("amount").cast("decimal(18,2)")).cast("double").alias("sum_amount"),
     )
     sink = f"synth_stream_{uuid.uuid4().hex[:8]}"
-    prev = spark.conf.get("spark.sql.shuffle.partitions", None)
-    spark.conf.set(
-        "spark.sql.shuffle.partitions", str(spark.sparkContext.defaultParallelism)
-    )
-    try:
+    with _drain_confs(spark):
         q = (
             agg.writeStream.format("memory")
             .queryName(sink)
@@ -249,9 +247,4 @@ def synthetic_stream_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
         q.processAllAvailable()
         q.stop()
         q.awaitTermination()
-    finally:
-        if prev is None:
-            spark.conf.unset("spark.sql.shuffle.partitions")
-        else:
-            spark.conf.set("spark.sql.shuffle.partitions", prev)
     return spark.table(sink)

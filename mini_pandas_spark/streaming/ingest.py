@@ -38,7 +38,7 @@ from ..sources.tables import ensure_runtime_confs
 from .windows import (
     BOUNDED_KEY_PARTITIONS,
     _events_fingerprint,
-    _stream_partitions,
+    _drain_confs,
 )
 
 _INGEST_MEMO: OrderedDict = OrderedDict()
@@ -99,7 +99,7 @@ def _ingest_artifacts(spark: SparkSession, sf_dir: str):
             .option("pathGlobFilter", "*.parquet")
             .load(src)
         )
-        with _stream_partitions(spark, BOUNDED_KEY_PARTITIONS):
+        with _drain_confs(spark, partitions=BOUNDED_KEY_PARTITIONS):
             q = (
                 stream.writeStream.foreachBatch(write_batch)
                 .option("checkpointLocation", ck)

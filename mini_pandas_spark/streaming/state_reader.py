@@ -49,7 +49,7 @@ from .windows import (
     BOUNDED_KEY_PARTITIONS,
     _events_fingerprint,
     _source_schema,
-    _stream_partitions,
+    _drain_confs,
     read_events_stream,
 )
 
@@ -87,7 +87,7 @@ def _user_totals_state_checkpoint(spark: SparkSession, sf_dir: str) -> str:
     )
     ck = scratch_dir("state_ckpt_")
     sink = f"state_drain_{uuid.uuid4().hex[:8]}"
-    with _stream_partitions(spark, BOUNDED_KEY_PARTITIONS):
+    with _drain_confs(spark, partitions=BOUNDED_KEY_PARTITIONS):
         q = (
             agg.writeStream.format("memory")
             .queryName(sink)
@@ -130,7 +130,7 @@ def build_standing_state_checkpoints(spark: SparkSession, sf_dir: str) -> None:
     watermarked outer join) run CONCURRENTLY, each on its own cloned
     SparkSession: clones share the SparkContext (so the memo key's
     applicationId still matches the caller's session) but have
-    isolated SQLConf, so each drain's _stream_partitions pin cannot
+    isolated SQLConf, so each drain's _drain_confs pins cannot
     race another's.  Measured at sf0.1 (warm streaming engine,
     sentinel dir prebuilt): sequential 7.6s, concurrent 2.5s
     (SCALE.md §6q) — the drains' fixed per-batch/state-store overhead
@@ -239,7 +239,7 @@ def _evolution_checkpoint(spark: SparkSession, sf_dir: str) -> str:
     )
     ck = scratch_dir("state_evo_ck_")
     sink = f"state_evo_{uuid.uuid4().hex[:8]}"
-    with _stream_partitions(spark, BOUNDED_KEY_PARTITIONS):
+    with _drain_confs(spark, partitions=BOUNDED_KEY_PARTITIONS):
         q = (
             agg.writeStream.format("memory")
             .queryName(sink)
@@ -325,7 +325,7 @@ def _outer_join_state_checkpoint(spark: SparkSession, sf_dir: str) -> str:
     )
     ck = scratch_dir("join_state_ck_")
     sink = f"join_state_drain_{uuid.uuid4().hex[:8]}"
-    with _stream_partitions(spark, OUTER_JOIN_STATE_PARTITIONS):
+    with _drain_confs(spark, partitions=OUTER_JOIN_STATE_PARTITIONS):
         q = (
             joined.writeStream.format("memory")
             .queryName(sink)

@@ -23,14 +23,17 @@ Execution model notes:
 from __future__ import annotations
 
 import os
+import threading
 import uuid
+import weakref
+from collections import OrderedDict
 from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions import decimal_sum
-from ..memo import evict_lru, scratch_dir
+from ..memo import evict_lru, scratch_dir, table_fingerprint
 from ..session import ensure_runtime_confs
 
 _FMT = "yyyy-MM-dd HH:mm:ss"
@@ -71,32 +74,107 @@ def _drained_table(spark: SparkSession, sink: str) -> DataFrame:
     return out
 
 
-@contextmanager
-def _no_data_batch(spark: SparkSession, enabled: bool):
-    """Pin ``noDataMicroBatches.enabled`` for one drain, restoring the
-    caller's setting afterwards (the _stream_partitions recipe).
+# Spark's FileSystem-based checkpoint manager: renames go through
+# FileSystem.rename.  The default FileContext-based manager resolves each
+# rename's link status, which without libhadoop forks a `readlink` per
+# checkpoint file (CLAUDE.md invariant 11).  Safe for every checkpoint this
+# engine writes: they are all local (memo.scratch_dir mkdtemps, memory
+# sinks' temp checkpoints), where rename(2) is atomic.
+_FS_CHECKPOINT_MANAGER = (
+    "org.apache.spark.sql.execution.streaming.checkpointing."
+    "FileSystemBasedCheckpointFileManager"
+)
 
-    The no-data micro-batch exists to run watermark-gated work with no
-    new input: outer-join state eviction EMITS rows there and event-time
-    timeouts FIRE there, so those topologies must keep it.  Drains whose
-    no-data batch provably emits nothing — an INNER stream-stream join
-    (eviction emits no rows) or a complete-mode aggregation (each batch
-    re-emits the full state; the no-data batch rewrites an identical
-    table) — pay a full extra micro-batch of state-store commits for
-    zero output rows; profiled at sf0.1 the inner join's no-data batch
-    costs as much as its data batch (3.5 s at 32 state partitions).
-    Guide §2.1 applied to checkpoint I/O: remove the batch outright.
+# One lock per SparkSession: drains on one session take turns through
+# _drain_confs, while cloned sessions (spark.newSession(), isolated
+# SQLConf) keep overlapping — state_reader.build_standing_state_checkpoints
+# builds three checkpoints concurrently that way.
+_DRAIN_LOCKS: "weakref.WeakKeyDictionary" = weakref.WeakKeyDictionary()
+_DRAIN_LOCKS_GUARD = threading.Lock()
+
+
+@contextmanager
+def _drain_confs(
+    spark: SparkSession,
+    *,
+    partitions: int | None = None,
+    no_data_batch: bool = True,
+    provider: str | None = None,
+):
+    """The one conf scope every drain starts its query in.
+
+    Sets, for the scope, the session confs a streaming query freezes at
+    ``.start()``, and restores the caller's values on exit (explicit
+    values come back, unset ones are unset again):
+
+    - ``spark.sql.shuffle.partitions`` = ``partitions``.  AQE never
+      coalesces stateful streaming shuffles: the state partition count
+      is frozen per-checkpoint at query start (default 200), so a bare
+      driver session runs 200 near-empty state tasks per micro-batch.
+      Default = ``defaultParallelism`` (tracks executor cores — right
+      for user-keyed state whose cardinality scales with the data:
+      user_totals, dedup_events).  Drains whose key domain is bounded by
+      construction pass ``BOUNDED_KEY_PARTITIONS``; watermark-bounded
+      joins pass ``OUTER_JOIN_STATE_PARTITIONS``.
+    - ``noDataMicroBatches.enabled`` = ``no_data_batch``.  The no-data
+      micro-batch runs watermark-gated work with no new input:
+      outer-join state eviction EMITS rows there and event-time
+      timeouts FIRE there, so those topologies keep the default (True,
+      pinned so a caller's session cannot turn it off).  Drains whose
+      no-data batch provably emits nothing — an INNER stream-stream join
+      (eviction emits no rows) or a complete-mode aggregation (the
+      no-data batch rewrites an identical table) — pass False and skip
+      a full extra micro-batch of state-store commits (profiled at
+      sf0.1: the inner join's no-data batch cost as much as its data
+      batch).
+    - ``checkpointFileManagerClass`` = the FileSystem-based manager,
+      always: fork-free checkpoint renames (``_FS_CHECKPOINT_MANAGER``).
+    - ``stateStore.providerClass`` = ``provider``, when given.
+
+    These confs are session-global, and the no-data one decides
+    correctness, so drains on one session must not overlap: the scope
+    holds a per-session lock for its whole body (start through
+    awaitTermination), and raises if the session already has an active
+    query — one started outside any scope would have frozen whatever
+    confs were live at its start, and one started now would freeze
+    ours.
     """
-    key = "spark.sql.streaming.noDataMicroBatches.enabled"
-    prev = spark.conf.get(key, None)
-    spark.conf.set(key, "true" if enabled else "false")
-    try:
-        yield
-    finally:
-        if prev is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, prev)
+    confs = {
+        "spark.sql.shuffle.partitions": str(
+            partitions
+            if partitions is not None
+            else spark.sparkContext.defaultParallelism
+        ),
+        "spark.sql.streaming.noDataMicroBatches.enabled": (
+            "true" if no_data_batch else "false"
+        ),
+        "spark.sql.streaming.checkpointFileManagerClass": _FS_CHECKPOINT_MANAGER,
+    }
+    if provider is not None:
+        confs["spark.sql.streaming.stateStore.providerClass"] = provider
+    with _DRAIN_LOCKS_GUARD:
+        lock = _DRAIN_LOCKS.setdefault(spark, threading.RLock())
+    with lock:
+        active = spark.streams.active
+        if active:
+            names = sorted(str(q.name or q.id) for q in active)
+            raise RuntimeError(
+                "cannot start a drain: the session has active streaming "
+                f"queries {names}; drains pin session-wide confs at query "
+                "start, so stop those queries first or drain on "
+                "spark.newSession()"
+            )
+        prev = {k: spark.conf.get(k, None) for k in confs}  # None ⇒ unset
+        try:
+            for k, v in confs.items():
+                spark.conf.set(k, v)
+            yield
+        finally:
+            for k, v in prev.items():
+                if v is None:
+                    spark.conf.unset(k)
+                else:
+                    spark.conf.set(k, v)
 
 
 # Footer-read schema memo for streaming sources: every drain needs an
@@ -104,56 +182,28 @@ def _no_data_batch(spark: SparkSession, enabled: bool):
 # read, ~50-150 ms) per call — ~18 call sites across the family pay it
 # once per billed row.  Keyed on (path, mtime_ns+size fingerprint) per
 # invariant 9; schemas are session-independent, so no applicationId.
-_SOURCE_SCHEMA_MEMO: dict = {}
+_SOURCE_SCHEMA_MEMO: OrderedDict = OrderedDict()
 _SOURCE_SCHEMA_MEMO_MAX = 16
 
 
 def _source_schema(spark: SparkSession, path: str):
-    """Schema of a parquet fixture file/dir via one memoized footer read."""
-    from ..memo import table_fingerprint
+    """Schema of a parquet fixture file/dir via one memoized footer read.
 
+    A path that cannot be fingerprinted (stat failed, or no ``.parquet``
+    name) is read every time: no key could notice it being rewritten."""
     sf_dir, name = os.path.split(os.path.abspath(path))
-    key = (
-        os.path.abspath(path),
-        table_fingerprint(sf_dir, name.removesuffix(".parquet")),
-    )
+    fp = table_fingerprint(sf_dir, name.removesuffix(".parquet"))
+    if fp is None:
+        return spark.read.parquet(path).schema
+    key = (os.path.abspath(path), fp)
     hit = _SOURCE_SCHEMA_MEMO.get(key)
     if hit is not None:
+        _SOURCE_SCHEMA_MEMO.move_to_end(key)
         return hit
     schema = spark.read.parquet(path).schema
-    while len(_SOURCE_SCHEMA_MEMO) >= _SOURCE_SCHEMA_MEMO_MAX:
-        _SOURCE_SCHEMA_MEMO.pop(next(iter(_SOURCE_SCHEMA_MEMO)))
     _SOURCE_SCHEMA_MEMO[key] = schema
+    evict_lru(_SOURCE_SCHEMA_MEMO, _SOURCE_SCHEMA_MEMO_MAX)
     return schema
-
-
-@contextmanager
-def _stream_partitions(spark: SparkSession, nparts: int | None = None):
-    """Pin streaming state partitions for the duration of one drain.
-
-    AQE never coalesces stateful streaming shuffles: the state partition
-    count is frozen per-checkpoint from ``spark.sql.shuffle.partitions`` at
-    query start (default 200), so a bare driver session runs 200 near-empty
-    state tasks per micro-batch.  Default pin = ``defaultParallelism``
-    (tracks executor cores — right for user-keyed state whose cardinality
-    scales with the data: user_totals, dedup_events, stream-stream join).
-    Drains whose key domain is bounded by construction pass
-    ``BOUNDED_KEY_PARTITIONS`` instead — state partitioning should follow
-    keyed-state cardinality, not core count.  The prior value is restored
-    afterwards so batch queries in the caller's session keep their own
-    tuning.
-    """
-    key = "spark.sql.shuffle.partitions"
-    prev = spark.conf.get(key, None)  # None ⇒ not explicitly set
-    n = nparts if nparts is not None else spark.sparkContext.defaultParallelism
-    spark.conf.set(key, str(n))
-    try:
-        yield
-    finally:
-        if prev is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, prev)
 
 
 def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -214,7 +264,7 @@ def streaming_hourly_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     sink = f"stream_sink_{uuid.uuid4().hex[:8]}"
-    with _stream_partitions(spark, BOUNDED_KEY_PARTITIONS):
+    with _drain_confs(spark, partitions=BOUNDED_KEY_PARTITIONS):
         q = (
             agg.writeStream.format("memory")
             .queryName(sink)
@@ -291,7 +341,7 @@ def streaming_user_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     sink = f"state_sink_{uuid.uuid4().hex[:8]}"
-    with _stream_partitions(spark):
+    with _drain_confs(spark):
         q = (
             agg.writeStream.format("memory")
             .queryName(sink)
@@ -311,8 +361,8 @@ def transform_with_state_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     Mirrors streaming_user_totals (same oracle): drained AvailableNow over
     the static fixture the result equals the batch groupBy, so the v2
     state machinery is gated by the ANSI oracle.  transformWithState
-    requires the RocksDB state store — set per-query and restored, like
-    the partition pin.
+    requires the RocksDB state store — pinned by the drain's
+    ``_drain_confs`` scope.
 
     Gated: the state API v2 Python protocol needs ``protobuf``, which this
     container does not ship (and installs are off-limits; re-probed each
@@ -371,27 +421,15 @@ def transform_with_state_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     sink = f"tws_sink_{uuid.uuid4().hex[:8]}"
-    provider_key = "spark.sql.streaming.stateStore.providerClass"
-    prev_provider = spark.conf.get(provider_key, None)
-    spark.conf.set(
-        provider_key,
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
-        with _stream_partitions(spark):
-            q = (
-                agg.writeStream.format("memory")
-                .queryName(sink)
-                .outputMode("update")
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-    finally:
-        if prev_provider is None:
-            spark.conf.unset(provider_key)
-        else:
-            spark.conf.set(provider_key, prev_provider)
+    with _drain_confs(spark, provider=_ROCKSDB_PROVIDER):
+        q = (
+            agg.writeStream.format("memory")
+            .queryName(sink)
+            .outputMode("update")
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination()
     return _drained_table(spark, sink)
 
 
@@ -440,9 +478,9 @@ def stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     # defaultParallelism pin ran 32 partitions × 4 near-empty stores ×
     # 2 batches ≈ 8.0 s/drain; 4 partitions + no no-data batch ≈ 1.2 s.
     # An INNER join's no-data batch only evicts state and emits NOTHING,
-    # so skipping it cannot change the result (_no_data_batch docstring).
-    with _stream_partitions(spark, OUTER_JOIN_STATE_PARTITIONS), _no_data_batch(
-        spark, False
+    # so skipping it cannot change the result (_drain_confs docstring).
+    with _drain_confs(
+        spark, partitions=OUTER_JOIN_STATE_PARTITIONS, no_data_batch=False
     ):
         q = (
             joined.writeStream.format("memory")
@@ -472,7 +510,7 @@ def streaming_dedup_events(spark: SparkSession, sf_dir: str) -> DataFrame:
         ["user_id", "event_type"]
     )
     sink = f"dedup_sink_{uuid.uuid4().hex[:8]}"
-    with _stream_partitions(spark):
+    with _drain_confs(spark):
         q = (
             dedup.writeStream.format("memory")
             .queryName(sink)
@@ -518,7 +556,7 @@ def stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     sink = f"stream_sink_{uuid.uuid4().hex[:8]}"
-    with _stream_partitions(spark, BOUNDED_KEY_PARTITIONS):
+    with _drain_confs(spark, partitions=BOUNDED_KEY_PARTITIONS):
         q = (
             agg.writeStream.format("memory")
             .queryName(sink)
@@ -548,7 +586,7 @@ def streaming_sliding_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     sink = f"stream_sink_{uuid.uuid4().hex[:8]}"
-    with _stream_partitions(spark, BOUNDED_KEY_PARTITIONS):
+    with _drain_confs(spark, partitions=BOUNDED_KEY_PARTITIONS):
         q = (
             agg.writeStream.format("memory")
             .queryName(sink)
@@ -653,7 +691,7 @@ def stateful_sessionize_stream(
         )
     )
     sink = f"sess_state_{uuid.uuid4().hex[:8]}"
-    with _stream_partitions(spark):
+    with _drain_confs(spark):
         q = (
             sessions.writeStream.format("memory")
             .queryName(sink)
@@ -692,7 +730,7 @@ def streaming_hourly_approx_uniques(spark: SparkSession, sf_dir: str) -> DataFra
         )
     )
     sink = f"stream_sink_{uuid.uuid4().hex[:8]}"
-    with _stream_partitions(spark, BOUNDED_KEY_PARTITIONS):
+    with _drain_confs(spark, partitions=BOUNDED_KEY_PARTITIONS):
         q = (
             agg.writeStream.format("memory")
             .queryName(sink)
@@ -802,7 +840,7 @@ def streaming_anomaly_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("is_anomaly"),
     )
     sink = f"stream_sink_{uuid.uuid4().hex[:8]}"
-    with _stream_partitions(spark, BOUNDED_KEY_PARTITIONS):
+    with _drain_confs(spark, partitions=BOUNDED_KEY_PARTITIONS):
         q = (
             joined.writeStream.format("memory")
             .queryName(sink)
@@ -848,7 +886,7 @@ def streaming_topk_trending(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     sink = f"stream_sink_{uuid.uuid4().hex[:8]}"
-    with _stream_partitions(spark, BOUNDED_KEY_PARTITIONS):
+    with _drain_confs(spark, partitions=BOUNDED_KEY_PARTITIONS):
         q = (
             win.writeStream.format("memory")
             .queryName(sink)
@@ -936,7 +974,7 @@ def streaming_manifest_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     def sink_batch(batch_df, epoch_id):
         write_manifest(batch_df, os.path.join(root, f"epoch={epoch_id}"))
 
-    with _stream_partitions(spark, BOUNDED_KEY_PARTITIONS):
+    with _drain_confs(spark, partitions=BOUNDED_KEY_PARTITIONS):
         q = (
             agg.writeStream.foreachBatch(sink_batch)
             .outputMode("complete")
@@ -1010,7 +1048,7 @@ def stream_static_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
     )
     sink = f"stream_sink_{uuid.uuid4().hex[:8]}"
-    with _stream_partitions(spark, BOUNDED_KEY_PARTITIONS):
+    with _drain_confs(spark, partitions=BOUNDED_KEY_PARTITIONS):
         q = (
             agg.writeStream.format("memory")
             .queryName(sink)
@@ -1084,7 +1122,7 @@ def streaming_coreset_moments(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     sink = f"coreset_sink_{uuid.uuid4().hex[:8]}"
-    with _stream_partitions(spark, BOUNDED_KEY_PARTITIONS):
+    with _drain_confs(spark, partitions=BOUNDED_KEY_PARTITIONS):
         query = (
             agg.writeStream.format("memory")
             .queryName(sink)
@@ -1188,8 +1226,6 @@ def _standing_index_tables(spark: SparkSession, sf_dir: str):
     evict_lru(_STANDING_IDX_MEMO, _STANDING_IDX_MEMO_MAX, teardown=_drop_idx)
     return bands_tbl, sets_tbl
 
-
-from collections import OrderedDict
 
 _STANDING_IDX_MEMO: OrderedDict = OrderedDict()
 _STANDING_IDX_MEMO_MAX = 4
@@ -1309,7 +1345,7 @@ def streaming_neardup_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_new", "doc_old", F.round(jac, 6).alias("jaccard"))
     )
     sink = f"neardup_sink_{uuid.uuid4().hex[:8]}"
-    with _stream_partitions(spark, BOUNDED_KEY_PARTITIONS):
+    with _drain_confs(spark, partitions=BOUNDED_KEY_PARTITIONS):
         q = (
             verified.writeStream.format("memory")
             .queryName(sink)
@@ -1377,8 +1413,8 @@ def streaming_dedup_user_days(spark: SparkSession, sf_dir: str) -> DataFrame:
     # nothing — profiled at sf0.1 that batch re-wrote an identical sink
     # table for ~0.5 s of state-store commits.  Skip it: the drained
     # result is the data batch's complete emission either way.
-    with _stream_partitions(spark, BOUNDED_KEY_PARTITIONS), _no_data_batch(
-        spark, False
+    with _drain_confs(
+        spark, partitions=BOUNDED_KEY_PARTITIONS, no_data_batch=False
     ):
         q = (
             agg.writeStream.format("memory")
@@ -1438,7 +1474,7 @@ def streaming_epoch_log_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).repartition(BOUNDED_KEY_PARTITIONS)
     root = scratch_dir("epoch_log_sink_")
     ckpt = scratch_dir("epoch_log_ckpt_")
-    with _stream_partitions(spark, BOUNDED_KEY_PARTITIONS):
+    with _drain_confs(spark, partitions=BOUNDED_KEY_PARTITIONS):
         q = (
             proj.writeStream.format("epoch_log_sink")
             .option("path", root)
@@ -1662,8 +1698,8 @@ def streaming_outer_join_attribution(spark: SparkSession, sf_dir: str) -> DataFr
     # stores x 2 batches for near-empty stores (32 -> 8 measured
     # 9.6 -> 2.8 s at sf0.01; 8 -> 4 takes the sf0.1 warm drain
     # 3.4 -> 2.5 s, flat below 4).  A production deployment sizes this
-    # to horizon volume, which _stream_partitions parameterizes.
-    with _stream_partitions(spark, OUTER_JOIN_STATE_PARTITIONS):
+    # to horizon volume, which _drain_confs parameterizes.
+    with _drain_confs(spark, partitions=OUTER_JOIN_STATE_PARTITIONS):
         q = (
             joined.writeStream.format("memory")
             .queryName(sink)
@@ -1741,7 +1777,7 @@ def streaming_full_outer_reconcile(spark: SparkSession, sf_dir: str) -> DataFram
     )
     sink = f"sfor_sink_{uuid.uuid4().hex[:8]}"
     # see streaming_outer_join_attribution's sizing note
-    with _stream_partitions(spark, OUTER_JOIN_STATE_PARTITIONS):
+    with _drain_confs(spark, partitions=OUTER_JOIN_STATE_PARTITIONS):
         q = (
             joined.writeStream.format("memory")
             .queryName(sink)
@@ -1757,24 +1793,6 @@ _ROCKSDB_PROVIDER = (
     "org.apache.spark.sql.execution.streaming.state."
     "RocksDBStateStoreProvider"
 )
-
-
-@contextmanager
-def _state_store_provider(spark: SparkSession, provider: str):
-    """Pin the state-store provider class for one drain, restoring the
-    caller's setting afterwards (the _stream_partitions recipe).  The
-    provider is frozen per-checkpoint at query start, so the scope only
-    needs to cover .start()."""
-    key = "spark.sql.streaming.stateStore.providerClass"
-    prev = spark.conf.get(key, None)
-    spark.conf.set(key, provider)
-    try:
-        yield
-    finally:
-        if prev is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, prev)
 
 
 def rocksdb_daily_type_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1804,8 +1822,8 @@ def rocksdb_daily_type_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     sink = f"rocksdb_sink_{uuid.uuid4().hex[:8]}"
-    with _stream_partitions(spark, BOUNDED_KEY_PARTITIONS), _state_store_provider(
-        spark, _ROCKSDB_PROVIDER
+    with _drain_confs(
+        spark, partitions=BOUNDED_KEY_PARTITIONS, provider=_ROCKSDB_PROVIDER
     ):
         q = (
             agg.writeStream.format("memory")
@@ -1927,7 +1945,7 @@ def streaming_table_sink_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
         tbl = f"daily_type_sink_{tag}"
         root = scratch_dir("table_sink_")
         ck = os.path.join(root, "_ck")
-        with _stream_partitions(spark, BOUNDED_KEY_PARTITIONS):
+        with _drain_confs(spark, partitions=BOUNDED_KEY_PARTITIONS):
             q = (
                 agg.writeStream.outputMode("append")
                 .option("checkpointLocation", ck)

@@ -1,0 +1,475 @@
+"""Pins for the one drain-conf scope (``streaming.windows._drain_confs``)
+and the streaming source-schema memo.
+
+- every drain the package starts does so inside ``_drain_confs`` (AST
+  lint), so none can skip the state-partition pin or the fork-free
+  checkpoint manager;
+- the scope restores the caller's confs, serializes drains on one
+  session, lets cloned sessions overlap, and refuses to start next to a
+  query that is already running;
+- a warm drain forks no ``readlink`` and few processes overall (without
+  libhadoop, Spark's default FileContext checkpoint manager forks a
+  ``readlink`` per checkpoint rename);
+- ``_SOURCE_SCHEMA_MEMO`` is LRU and never memoizes an unfingerprinted
+  path.
+"""
+
+from __future__ import annotations
+
+import ast
+import json
+import os
+import shutil
+import subprocess
+import sys
+import textwrap
+import threading
+from collections import OrderedDict
+
+import pytest
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+PACKAGE = os.path.join(REPO, "mini_pandas_spark")
+
+KEYS = {
+    "partitions": "spark.sql.shuffle.partitions",
+    "no_data": "spark.sql.streaming.noDataMicroBatches.enabled",
+    "manager": "spark.sql.streaming.checkpointFileManagerClass",
+    "provider": "spark.sql.streaming.stateStore.providerClass",
+}
+
+
+# ---------------------------------------------------------------- lint
+
+
+def _reaches_write_stream(node: ast.AST) -> bool:
+    """True if a call/attribute chain passes through ``.writeStream``."""
+    while isinstance(node, (ast.Call, ast.Attribute)):
+        if isinstance(node, ast.Attribute) and node.attr == "writeStream":
+            return True
+        node = node.func if isinstance(node, ast.Call) else node.value
+    return False
+
+
+def _is_drain_scope(with_node: ast.With) -> bool:
+    for item in with_node.items:
+        call = item.context_expr
+        if isinstance(call, ast.Call):
+            fn = call.func
+            name = fn.attr if isinstance(fn, ast.Attribute) else getattr(fn, "id", None)
+            if name == "_drain_confs":
+                return True
+    return False
+
+
+def _unscoped_drain_starts(tree: ast.AST) -> tuple[int, list[int]]:
+    """(number of ``.writeStream…start()/toTable()`` calls, line numbers
+    of those not lexically inside ``with _drain_confs(...)``)."""
+    found, bad = 0, []
+
+    def visit(node: ast.AST, scoped: bool) -> None:
+        nonlocal found
+        if isinstance(node, ast.With) and _is_drain_scope(node):
+            scoped = True
+        if (
+            isinstance(node, ast.Call)
+            and isinstance(node.func, ast.Attribute)
+            and node.func.attr in ("start", "toTable")
+            and _reaches_write_stream(node.func.value)
+        ):
+            found += 1
+            if not scoped:
+                bad.append(node.lineno)
+        for child in ast.iter_child_nodes(node):
+            visit(child, scoped)
+
+    visit(tree, False)
+    return found, bad
+
+
+def test_lint_flags_a_drain_outside_the_scope():
+    src = textwrap.dedent(
+        """
+        def f(spark, agg):
+            with _drain_confs(spark):
+                agg.writeStream.format("memory").start()
+            agg.writeStream.format("memory").trigger(availableNow=True).start()
+            agg.writeStream.outputMode("append").toTable("t")
+            threading.Thread(target=f).start()
+        """
+    )
+    assert _unscoped_drain_starts(ast.parse(src)) == (3, [5, 6])
+
+
+def test_every_package_drain_starts_inside_drain_confs():
+    total, offenders = 0, []
+    for base, _, files in os.walk(PACKAGE):
+        for name in files:
+            if name.endswith(".py"):
+                path = os.path.join(base, name)
+                with open(path) as fh:
+                    found, bad = _unscoped_drain_starts(ast.parse(fh.read()))
+                total += found
+                offenders += [f"{os.path.relpath(path, REPO)}:{ln}" for ln in bad]
+    assert not offenders, f"drains started outside _drain_confs: {offenders}"
+    assert total >= 20, f"lint found only {total} drain starts — is it still matching?"
+
+
+# ---------------------------------------------------------------- scope
+
+
+def _read(spark) -> dict:
+    return {k: spark.conf.get(key, None) for k, key in KEYS.items()}
+
+
+def _restore(spark, saved: dict) -> None:
+    for k, v in saved.items():
+        if v is None:
+            spark.conf.unset(KEYS[k])
+        else:
+            spark.conf.set(KEYS[k], v)
+
+
+def test_drain_confs_restores_explicit_values_and_unsets_unset_ones(spark):
+    from mini_pandas_spark.streaming.windows import (
+        _FS_CHECKPOINT_MANAGER,
+        _ROCKSDB_PROVIDER,
+        _drain_confs,
+    )
+
+    saved = _read(spark)
+    try:
+        caller_manager = (
+            "org.apache.spark.sql.execution.streaming.checkpointing."
+            "FileContextBasedCheckpointFileManager"
+        )
+        spark.conf.set(KEYS["partitions"], "5")
+        spark.conf.set(KEYS["manager"], caller_manager)
+        spark.conf.unset(KEYS["no_data"])
+        spark.conf.unset(KEYS["provider"])
+        before = _read(spark)
+        assert before["no_data"] is None and before["provider"] is None
+
+        with _drain_confs(
+            spark, partitions=3, no_data_batch=False, provider=_ROCKSDB_PROVIDER
+        ):
+            assert _read(spark) == {
+                "partitions": "3",
+                "no_data": "false",
+                "manager": _FS_CHECKPOINT_MANAGER,
+                "provider": _ROCKSDB_PROVIDER,
+            }
+        assert _read(spark) == before
+
+        # defaults: cores-sized partitions, the no-data batch on, the
+        # provider left alone; an error inside the scope still restores
+        with pytest.raises(ZeroDivisionError):
+            with _drain_confs(spark):
+                got = _read(spark)
+                1 / 0
+        assert got == {
+            "partitions": str(spark.sparkContext.defaultParallelism),
+            "no_data": "true",
+            "manager": _FS_CHECKPOINT_MANAGER,
+            "provider": None,
+        }
+        assert _read(spark) == before
+    finally:
+        _restore(spark, saved)
+
+
+def test_drain_confs_refuses_to_start_next_to_an_active_query(spark, tmp_path):
+    from mini_pandas_spark.streaming.windows import _drain_confs
+
+    src = tmp_path / "empty_src"
+    src.mkdir()
+    # a query started outside any scope that stays up: a file source with
+    # the default trigger keeps polling its (empty) directory
+    q = (
+        spark.readStream.schema("a long")
+        .parquet(str(src))
+        .writeStream.format("memory")
+        .queryName("standing_outside_scope")
+        .start()
+    )
+    try:
+        before = _read(spark)
+        with pytest.raises(RuntimeError, match="active streaming queries.*standing_outside_scope"):
+            with _drain_confs(spark, partitions=2):
+                pass
+        assert _read(spark) == before  # nothing was set
+    finally:
+        q.stop()
+        spark.catalog.dropTempView("standing_outside_scope")
+    with _drain_confs(spark):  # usable again once the query is gone
+        pass
+
+
+def test_drain_scopes_on_one_session_never_interleave(spark):
+    """More threads than cores, a short switch interval: inside its scope
+    each thread must keep seeing its own partition pin."""
+    from mini_pandas_spark.streaming.windows import _drain_confs
+
+    key = KEYS["partitions"]
+    saved = spark.conf.get(key, None)
+    clashes, inside = [], []
+    old_interval = sys.getswitchinterval()
+
+    def worker(n: int) -> None:
+        for _ in range(5):
+            with _drain_confs(spark, partitions=n):
+                inside.append(n)
+                if spark.conf.get(key) != str(n):
+                    clashes.append(n)
+
+    sys.setswitchinterval(1e-5)
+    try:
+        n_threads = 3 * (os.cpu_count() or 4)
+        threads = [
+            threading.Thread(target=worker, args=(n,))
+            for n in range(2, 2 + n_threads)
+        ]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(120)
+        assert not any(t.is_alive() for t in threads)
+    finally:
+        sys.setswitchinterval(old_interval)
+    assert len(inside) == 5 * len(threads) and not clashes
+    assert spark.conf.get(key, None) == saved
+
+
+def test_cloned_sessions_hold_drain_scopes_at_once(spark):
+    from mini_pandas_spark.streaming.windows import _drain_confs
+
+    a, b = spark.newSession(), spark.newSession()
+    entered, release = threading.Event(), threading.Event()
+
+    def hold() -> None:
+        with _drain_confs(a, partitions=2):
+            entered.set()
+            release.wait(30)
+
+    holder = threading.Thread(target=hold)
+    holder.start()
+    try:
+        assert entered.wait(30)
+        # b's scope must not wait for a's lock
+        done = threading.Event()
+
+        def enter_b() -> None:
+            with _drain_confs(b, partitions=3):
+                assert b.conf.get(KEYS["partitions"]) == "3"
+                assert a.conf.get(KEYS["partitions"]) == "2"
+            done.set()
+
+        other = threading.Thread(target=enter_b)
+        other.start()
+        other.join(30)
+        assert done.is_set()
+    finally:
+        release.set()
+        holder.join(30)
+
+
+def _rows(df) -> list:
+    return sorted(tuple(r) for r in df.collect())
+
+
+def test_two_drains_in_threads_on_one_session_match_serial(spark, sf_dir):
+    """An outer join emits its null-padded rows in the no-data batch; the
+    complete-mode dedup drain turns that batch off.  On one session the
+    two drains must not see each other's confs: run in threads they give
+    exactly the serial answers (or a drain raises — never wrong rows)."""
+    from mini_pandas_spark.queries import queries
+    from mini_pandas_spark.streaming.windows import _drain_confs
+
+    qs = queries()
+    names = ("streaming_outer_join_attribution", "streaming_dedup_user_days")
+    serial = {n: _rows(qs[n](spark, sf_dir)) for n in names}
+    assert serial["streaming_outer_join_attribution"]
+
+    # 1. a scope with the no-data batch off is held open: the outer join
+    #    started meanwhile waits for it instead of starting under it
+    entered, release = threading.Event(), threading.Event()
+    out: dict = {}
+
+    def hold() -> None:
+        with _drain_confs(spark, no_data_batch=False):
+            entered.set()
+            release.wait(60)
+
+    def run(name: str) -> None:
+        try:
+            out[name] = _rows(qs[name](spark, sf_dir))
+        except Exception as exc:  # noqa: BLE001 — reported below
+            out[name] = exc
+
+    holder = threading.Thread(target=hold)
+    holder.start()
+    assert entered.wait(30)
+    outer = threading.Thread(target=run, args=(names[0],))
+    outer.start()
+    outer.join(3)
+    try:
+        assert outer.is_alive() and not spark.streams.active, (
+            "the outer join started while another drain's scope was open"
+        )
+    finally:
+        release.set()
+        holder.join(60)
+        outer.join(300)
+    assert not outer.is_alive()
+    assert out[names[0]] == serial[names[0]]
+
+    # 2. both drains free-running in threads on the one session
+    out.clear()
+    threads = [threading.Thread(target=run, args=(n,)) for n in names]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join(300)
+    assert not any(t.is_alive() for t in threads)
+    for n in names:
+        got = out[n]
+        if isinstance(got, Exception):
+            assert "active streaming" in str(got), got
+        else:
+            assert got == serial[n], n
+
+
+# ---------------------------------------------------------------- forks
+
+
+def _forks_since_boot() -> int:
+    """The host's ``/proc/stat`` ``processes`` counter: every clone since
+    boot, threads included."""
+    with open("/proc/stat") as fh:
+        for line in fh:
+            if line.startswith("processes "):
+                return int(line.split()[1])
+    raise AssertionError("no processes line in /proc/stat")
+
+
+def test_warm_hourly_drain_forks_few_processes(spark, sf_dir):
+    """Processes forked across one warm ``streaming_hourly_counts`` drain:
+    the host's clone count minus the threads the JVM started meanwhile.
+    With the FileContext checkpoint manager that was 236 (176
+    ``readlink`` + 60 ``chmod``); the FileSystem-based one leaves only the
+    ``chmod`` of permissioned creates (60)."""
+    from mini_pandas_spark.queries import queries
+
+    jvm = spark.sparkContext._jvm
+    threads = jvm.java.lang.management.ManagementFactory.getThreadMXBean()
+    drain = queries()["streaming_hourly_counts"]
+    drain(spark, sf_dir).collect()  # warm
+    clones0, threads0 = _forks_since_boot(), threads.getTotalStartedThreadCount()
+    drain(spark, sf_dir).collect()
+    clones = _forks_since_boot() - clones0
+    started = threads.getTotalStartedThreadCount() - threads0
+    forks = clones - started
+    assert forks < 150, (
+        f"{forks} processes forked across one warm drain "
+        f"({clones} clones, {started} of them JVM threads)"
+    )
+
+
+_FORK_PROBE = """
+import collections, json, os, sys
+sys.path.insert(0, {repo!r})
+from mini_pandas_spark.queries import queries
+from mini_pandas_spark.session import get_spark
+
+spark = get_spark("fork-probe", cpus=2, shuffle_partitions=2)
+native = bool(spark._jvm.org.apache.hadoop.util.NativeCodeLoader.isNativeCodeLoaded())
+drain = queries()["streaming_hourly_counts"]
+drain(spark, {sf_dir!r}).collect()  # warm
+open(os.environ["FORK_LOG"], "w").close()
+drain(spark, {sf_dir!r}).collect()
+with open(os.environ["FORK_LOG"]) as fh:
+    counts = collections.Counter(fh.read().split())
+spark.stop()
+print("FORKS " + json.dumps({{"native": native, **counts}}))
+"""
+
+
+def test_warm_drain_forks_no_readlink(tmp_path, sf_dir):
+    """Counts the ``readlink``/``chmod`` execs of a fresh session's JVM
+    through logging wrappers ahead of the real binaries on its PATH."""
+    wrappers = tmp_path / "bin"
+    wrappers.mkdir()
+    for cmd in ("readlink", "chmod"):
+        real = shutil.which(cmd)
+        if real is None:
+            pytest.skip(f"no {cmd} on PATH")
+        w = wrappers / cmd
+        w.write_text(f'#!/bin/sh\necho {cmd} >> "$FORK_LOG"\nexec {real} "$@"\n')
+        w.chmod(0o755)
+    env = dict(
+        os.environ,
+        PATH=f"{wrappers}{os.pathsep}{os.environ.get('PATH', '')}",
+        FORK_LOG=str(tmp_path / "forks.log"),
+        SPARK_DRIVER_MEM="1g",
+    )
+    script = _FORK_PROBE.format(repo=REPO, sf_dir=os.path.abspath(sf_dir))
+    res = subprocess.run(
+        [sys.executable, "-c", script],
+        cwd=tmp_path, env=env, capture_output=True, text=True, timeout=600,
+    )
+    line = [ln for ln in res.stdout.splitlines() if ln.startswith("FORKS ")]
+    assert res.returncode == 0 and line, res.stderr[-3000:]
+    counts = json.loads(line[-1][len("FORKS "):])
+    if counts["native"]:
+        pytest.skip("libhadoop is loaded: Hadoop forks no shell commands")
+    # the wrappers do see the JVM's forks: permissioned creates still chmod
+    assert counts.get("chmod", 0) > 0, counts
+    assert counts.get("readlink", 0) == 0, counts
+
+
+# ---------------------------------------------------------------- schema memo
+
+
+def _write_parquet(path: str, columns: dict) -> None:
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    pq.write_table(pa.table(columns), path)
+
+
+def test_source_schema_memo_is_lru(spark, tmp_path, monkeypatch):
+    from mini_pandas_spark.streaming import windows
+
+    monkeypatch.setattr(windows, "_SOURCE_SCHEMA_MEMO", OrderedDict())
+    monkeypatch.setattr(windows, "_SOURCE_SCHEMA_MEMO_MAX", 2)
+    paths = {}
+    for name in "abc":
+        paths[name] = str(tmp_path / f"{name}.parquet")
+        _write_parquet(paths[name], {name: [1, 2]})
+
+    def cached() -> set:
+        return {k[0] for k in windows._SOURCE_SCHEMA_MEMO}
+
+    windows._source_schema(spark, paths["a"])
+    windows._source_schema(spark, paths["b"])
+    windows._source_schema(spark, paths["a"])  # hit: a is now most recent
+    windows._source_schema(spark, paths["c"])
+    assert cached() == {paths["a"], paths["c"]}
+
+
+def test_source_schema_skips_memo_without_fingerprint(spark, tmp_path, monkeypatch):
+    """A dataset directory without a ``.parquet`` name has no fixture
+    fingerprint; its schema must be read afresh each time, so a rewrite
+    with new columns is seen."""
+    from mini_pandas_spark.streaming import windows
+
+    monkeypatch.setattr(windows, "_SOURCE_SCHEMA_MEMO", OrderedDict())
+    ds = tmp_path / "events_dir"
+    ds.mkdir()
+    _write_parquet(str(ds / "part-0.parquet"), {"a": [1]})
+    assert windows._source_schema(spark, str(ds)).fieldNames() == ["a"]
+    assert not windows._SOURCE_SCHEMA_MEMO
+
+    os.remove(ds / "part-0.parquet")
+    _write_parquet(str(ds / "part-1.parquet"), {"a": [1], "b": [2]})
+    assert windows._source_schema(spark, str(ds)).fieldNames() == ["a", "b"]

@@ -296,7 +296,7 @@ def test_session_window_update_mode_grows_sessions(spark, tmp_path):
     executable documentation), and COMPLETE mode over a session that
     spans micro-batches must equal the one-shot batch answer, including
     the cross-batch session merge."""
-    from mini_pandas_spark.streaming.windows import _stream_partitions
+    from mini_pandas_spark.streaming.windows import _drain_confs
 
     d = str(tmp_path / "sess_upd")
     os.makedirs(d)
@@ -326,7 +326,7 @@ def test_session_window_update_mode_grows_sessions(spark, tmp_path):
     # (a) update mode is rejected up front — supported-mode matrix pin
     import pyspark.errors
 
-    with _stream_partitions(spark):
+    with _drain_confs(spark):
         with pytest.raises(
             pyspark.errors.exceptions.captured.AnalysisException,
             match="STREAMING_OUTPUT_MODE",

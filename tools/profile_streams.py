@@ -10,12 +10,20 @@ init per partition per store).  This tool answers, per drain:
   - where each batch spent its time (StreamingQueryProgress.durationMs:
     triggerExecution / addBatch / walCommit / commitOffsets /
     latestOffset / queryPlanning / getBatch),
-  - state operator row counts (memory-used, rows updated/total).
+  - state operator row counts (memory-used, rows updated/total),
+  - processes forked during the drain and the CPU of the JVM's reaped
+    children (``cutime+cstime``) — without libhadoop, Hadoop forks a
+    shell command per checkpoint-file permission set.  Forks are the
+    host's ``/proc/stat`` clone count, which includes threads, minus the
+    threads the JVM started meanwhile: run on a quiet host.
 
 Usage:
     python tools/profile_streams.py streaming_hourly_counts rocksdb_...
     python tools/profile_streams.py --all                # every drain
     python tools/profile_streams.py --conf k=v ... q     # A/B a conf
+
+``--conf`` values are applied when the session is built, so static confs
+take effect too.
 """
 
 from __future__ import annotations
@@ -61,11 +69,51 @@ def materialize(df) -> None:
     df.write.format("noop").mode("overwrite").save()
 
 
+def clones_since_boot() -> int:
+    """Processes and threads created on this host since boot
+    (``/proc/stat`` ``processes``)."""
+    with open("/proc/stat") as fh:
+        for line in fh:
+            if line.startswith("processes "):
+                return int(line.split()[1])
+    return 0
+
+
+def reaped_child_cpu_s(pid: int) -> float:
+    """cutime+cstime of ``pid``: CPU of the children it has reaped."""
+    with open(f"/proc/{pid}/stat") as fh:
+        raw = fh.read()
+    fields = raw[raw.rindex(")") + 2:].split()
+    # proc(5) fields 16-17, counted from the state field (3)
+    return (int(fields[13]) + int(fields[14])) / os.sysconf("SC_CLK_TCK")
+
+
 class _ProgressTap:
     """Collects StreamingQueryProgress rows from a listener."""
 
     def __init__(self):
         self.rows = []
+        self.started = 0
+        self.terminated = 0
+
+    def settle(self, timeout: float = 10.0, quiet: float = 0.1) -> bool:
+        """Wait until the progress rows stop growing: every query that
+        started has posted its terminated event (the listener bus delivers
+        a query's progress rows before it) and no row arrived for
+        ``quiet`` seconds.  False if ``timeout`` passes first."""
+        deadline = time.monotonic() + timeout
+        seen, since = len(self.rows), time.monotonic()
+        while time.monotonic() < deadline:
+            n = len(self.rows)
+            if n != seen:
+                seen, since = n, time.monotonic()
+            elif (
+                self.terminated >= self.started
+                and time.monotonic() - since >= quiet
+            ):
+                return True
+            time.sleep(0.02)
+        return False
 
     def listener(self):
         from pyspark.sql.streaming import StreamingQueryListener
@@ -74,7 +122,7 @@ class _ProgressTap:
 
         class Tap(StreamingQueryListener):
             def onQueryStarted(self, event):
-                pass
+                tap.started += 1
 
             def onQueryProgress(self, event):
                 p = event.progress
@@ -111,7 +159,7 @@ class _ProgressTap:
                 pass
 
             def onQueryTerminated(self, event):
-                pass
+                tap.terminated += 1
 
         return Tap()
 
@@ -127,10 +175,14 @@ def main() -> None:
     args = ap.parse_args()
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    spark = get_spark("mini-pandas-spark-stream-profile")
-    for kv in args.conf:
-        k, _, v = kv.partition("=")
-        spark.conf.set(k, v)
+    confs = dict(kv.split("=", 1) for kv in args.conf)
+    spark = get_spark("mini-pandas-spark-stream-profile", extra_confs=confs)
+    for k, v in confs.items():  # the session may predate this call
+        if spark.conf.get(k, None) != v:
+            print(f"warning: --conf {k}={v} did not take effect", file=sys.stderr)
+    jvm = spark.sparkContext._jvm
+    jvm_pid = int(jvm.java.lang.ProcessHandle.current().pid())
+    jvm_threads = jvm.java.lang.management.ManagementFactory.getThreadMXBean()
     qs = queries()
     names = STREAM_QUERIES if args.all else args.names
     unknown = [n for n in names if n not in qs]
@@ -151,13 +203,22 @@ def main() -> None:
         for rep in range(args.reps):
             mark = len(tap.rows)
             spark.sparkContext.setJobDescription(f"stream-profile:{name}:r{rep}")
+            clones0 = clones_since_boot()
+            threads0 = jvm_threads.getTotalStartedThreadCount()
+            child0 = reaped_child_cpu_s(jvm_pid)
             t0 = time.time()
             materialize(qs[name](spark, sf_dir))
             wall = round(time.time() - t0, 3)
+            threads = jvm_threads.getTotalStartedThreadCount() - threads0
+            forks = clones_since_boot() - clones0 - threads
+            child_cpu = round(reaped_child_cpu_s(jvm_pid) - child0, 3)
             spark.sparkContext.setJobDescription(None)
-            time.sleep(0.3)  # listener delivery is async
+            if not tap.settle():
+                print(f"warning: {name} r{rep}: listener rows still "
+                      "arriving after 10 s", file=sys.stderr)
             batches = tap.rows[mark:]
-            reps.append({"wall": wall, "batches": batches})
+            reps.append({"wall": wall, "forks": forks, "jvm_threads": threads,
+                         "child_cpu_s": child_cpu, "batches": batches})
         walls = sorted(r["wall"] for r in reps)
         results[name] = {"min": walls[0], "med": walls[len(walls) // 2], "reps": reps}
         last = reps[-1]["batches"]
@@ -174,6 +235,7 @@ def main() -> None:
         )
         print(
             f"{name:38s} min={walls[0]:6.2f} med={walls[len(walls)//2]:6.2f} "
+            f"forks={reps[-1]['forks']} child_cpu={reps[-1]['child_cpu_s']:.2f}s "
             f"n_batches={len(last)}  {summary}",
             flush=True,
         )

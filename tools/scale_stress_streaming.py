@@ -36,6 +36,8 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
+from mini_pandas_spark.streaming.windows import _drain_confs
+
 BASE = "/root/testdata/sf0.1"
 ROCKSDB = (
     "org.apache.spark.sql.execution.streaming.state."
@@ -97,14 +99,8 @@ def drain(spark: SparkSession, src: str, provider: str) -> dict:
     )
     ck = tempfile.mkdtemp(prefix="stress_stream_ck_")
     sink = f"stress_{uuid.uuid4().hex[:8]}"
-    prev_part = spark.conf.get("spark.sql.shuffle.partitions")
-    prev_prov = spark.conf.get(
-        "spark.sql.streaming.stateStore.providerClass", None
-    )
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass", provider)
     t0 = time.time()
-    try:
+    with _drain_confs(spark, partitions=8, provider=provider):
         q = (
             agg.writeStream.format("memory")
             .queryName(sink)
@@ -114,14 +110,6 @@ def drain(spark: SparkSession, src: str, provider: str) -> dict:
             .start()
         )
         q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_part)
-        if prev_prov is None:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        else:
-            spark.conf.set(
-                "spark.sql.streaming.stateStore.providerClass", prev_prov
-            )
     wall = time.time() - t0
     # update-mode sink re-emits updated keys per batch; final value per key
     drained = {
