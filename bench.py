@@ -247,12 +247,12 @@ def final_line(result: dict, budget: int = FINAL_BUDGET) -> str:
         n -= 1
 
 
-def main() -> None:
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    sf = os.path.basename(sf_dir.rstrip("/")).replace("sf", "")
-    spark = get_spark("mini-pandas-spark-bench")
+def warm(spark, sf_dir: str) -> None:
+    """The unbilled warmup every timing tool runs before its timed rows
+    (bench.main, tools/profile_queries.py, tools/profile_streams.py):
+    engine warmups plus the standing-infrastructure builds listed in
+    BASELINE.md's 'Unbilled warmup inventory'."""
     qs = queries()
-    t_warmup0 = time.time()
 
     # Warmup (not billed): JVM/codegen, the Python worker pool (several
     # headline queries use Arrow UDFs), and one full scan of every input
@@ -376,6 +376,15 @@ def main() -> None:
     qs["manifest_roundtrip_stats"](
         spark, warm_sf if os.path.isdir(warm_sf) else sf_dir
     ).count()
+
+
+def main() -> None:
+    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    sf = os.path.basename(sf_dir.rstrip("/")).replace("sf", "")
+    spark = get_spark("mini-pandas-spark-bench")
+    qs = queries()
+    t_warmup0 = time.time()
+    warm(spark, sf_dir)
     # total unbilled warmup time, surfaced in the on-disk record so the
     # standing-infrastructure builds are auditable per run (ADVICE r11;
     # the per-build inventory with one-off costs lives in BASELINE.md)

@@ -221,7 +221,7 @@ def synthetic_stream_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from pyspark.sql import functions as F
 
-    from ..streaming.windows import _drain_confs
+    from ..streaming.windows import _drain_confs, _drained_table
 
     del sf_dir
     register_synthetic_stream(spark)
@@ -236,6 +236,9 @@ def synthetic_stream_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("event_id").alias("sum_ids"),
         F.sum(F.col("amount").cast("decimal(18,2)")).cast("double").alias("sum_amount"),
     )
+    # Not _drain_to_memory: Trigger.AvailableNow drains only the first of
+    # this Python source's five 100-event batches (100 of 500 rows), so
+    # the query runs on the default trigger until processAllAvailable.
     sink = f"synth_stream_{uuid.uuid4().hex[:8]}"
     with _drain_confs(spark):
         q = (
@@ -247,4 +250,4 @@ def synthetic_stream_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
         q.processAllAvailable()
         q.stop()
         q.awaitTermination()
-    return spark.table(sink)
+    return _drained_table(spark, sink)

@@ -38,7 +38,6 @@ import os
 import shutil
 
 from ..memo import scratch_dir
-import uuid
 from collections import OrderedDict
 
 from pyspark.sql import DataFrame, SparkSession
@@ -47,9 +46,9 @@ from pyspark.sql import functions as F
 from ..sources.tables import ensure_runtime_confs
 from .windows import (
     BOUNDED_KEY_PARTITIONS,
+    _drain_to_memory,
     _events_fingerprint,
     _source_schema,
-    _drain_confs,
     read_events_stream,
 )
 
@@ -86,18 +85,10 @@ def _user_totals_state_checkpoint(spark: SparkSession, sf_dir: str) -> str:
         F.max("ts").alias("last"),
     )
     ck = scratch_dir("state_ckpt_")
-    sink = f"state_drain_{uuid.uuid4().hex[:8]}"
-    with _drain_confs(spark, partitions=BOUNDED_KEY_PARTITIONS):
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("update")
-            .option("checkpointLocation", ck)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    spark.catalog.dropTempView(sink)  # the sink table is not the product
+    # the drained rows are not the product: the checkpoint's state is
+    _drain_to_memory(
+        spark, agg, "update", checkpoint=ck, partitions=BOUNDED_KEY_PARTITIONS
+    )
     # memo values are always TUPLES of dirs (first = checkpoint) so the
     # shared eviction loop can rmtree every associated dir
     _STATE_CKPT_MEMO[key] = (ck,)
@@ -238,18 +229,9 @@ def _evolution_checkpoint(spark: SparkSession, sf_dir: str) -> str:
         )
     )
     ck = scratch_dir("state_evo_ck_")
-    sink = f"state_evo_{uuid.uuid4().hex[:8]}"
-    with _drain_confs(spark, partitions=BOUNDED_KEY_PARTITIONS):
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("update")
-            .option("checkpointLocation", ck)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    spark.catalog.dropTempView(sink)
+    _drain_to_memory(
+        spark, agg, "update", checkpoint=ck, partitions=BOUNDED_KEY_PARTITIONS
+    )
     _STATE_CKPT_MEMO[key] = (ck, root)
     _evict_state_memo()
     return ck
@@ -324,18 +306,13 @@ def _outer_join_state_checkpoint(spark: SparkSession, sf_dir: str) -> str:
         F.coalesce(F.col("error_id"), F.lit(-1)).cast("long").alias("error_id"),
     )
     ck = scratch_dir("join_state_ck_")
-    sink = f"join_state_drain_{uuid.uuid4().hex[:8]}"
-    with _drain_confs(spark, partitions=OUTER_JOIN_STATE_PARTITIONS):
-        q = (
-            joined.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("append")
-            .option("checkpointLocation", ck)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    spark.catalog.dropTempView(sink)
+    _drain_to_memory(
+        spark,
+        joined,
+        "append",
+        checkpoint=ck,
+        partitions=OUTER_JOIN_STATE_PARTITIONS,
+    )
     _STATE_CKPT_MEMO[key] = (ck,)
     _evict_state_memo()
     return ck

@@ -66,8 +66,10 @@ def _drained_table(spark: SparkSession, sink: str) -> DataFrame:
     every drain leaks a uniquely-named temp view whose MemorySink
     retains the drained rows for the rest of the session — across a
     160-query bench that is dozens of dead sinks' worth of catalog
-    entries and JVM heap (the state-reader drains already dropped
-    theirs).  The rows are freed once the caller discards the frame.
+    entries and JVM heap.  The rows are freed once the caller discards
+    the frame.  Every memory-sink read-back goes through here: the
+    drains via ``_drain_to_memory``, and sources/synthetic.py's
+    processAllAvailable drain directly.
     """
     out = spark.table(sink)
     spark.catalog.dropTempView(sink)
@@ -177,6 +179,48 @@ def _drain_confs(
                     spark.conf.set(k, v)
 
 
+def _input_rows(query) -> int:
+    """Rows a finished query read, summed over its progress reports."""
+    return sum(int(p.numInputRows) for p in query.recentProgress or [])
+
+
+def _drain_to_memory(
+    spark: SparkSession,
+    frame: DataFrame,
+    mode: str,
+    *,
+    checkpoint: str | None = None,
+    **scope,
+) -> tuple[DataFrame, int]:
+    """Drain a streaming ``frame`` into a memory sink: the one place a
+    memory-sink drain is started.
+
+    Names the sink, starts it in output ``mode`` with
+    Trigger.AvailableNow inside ``_drain_confs(spark, **scope)``, waits
+    with an untimed ``awaitTermination()``, and reads it back through
+    ``_drained_table`` (the temp view is always dropped).  ``checkpoint``
+    pins the checkpoint location for callers that read the state store
+    afterwards; otherwise Spark uses a temporary one.
+
+    Returns ``(rows, input_rows)``: the drained frame and the number of
+    rows the query read, which drains use to fail loudly on a source
+    layout that silently matched nothing.
+    """
+    sink = f"memory_drain_{uuid.uuid4().hex[:8]}"
+    opts = {} if checkpoint is None else {"checkpointLocation": checkpoint}
+    with _drain_confs(spark, **scope):
+        q = (
+            frame.writeStream.format("memory")
+            .queryName(sink)
+            .outputMode(mode)
+            .options(**opts)
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination()
+    return _drained_table(spark, sink), _input_rows(q)
+
+
 # Footer-read schema memo for streaming sources: every drain needs an
 # explicit schema, previously via a fresh batch read (driver footer
 # read, ~50-150 ms) per call — ~18 call sites across the family pay it
@@ -263,17 +307,9 @@ def streaming_hourly_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
             "sum_value",
         )
     )
-    sink = f"stream_sink_{uuid.uuid4().hex[:8]}"
-    with _drain_confs(spark, partitions=BOUNDED_KEY_PARTITIONS):
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return _drained_table(spark, sink)
+    return _drain_to_memory(
+        spark, agg, "complete", partitions=BOUNDED_KEY_PARTITIONS
+    )[0]
 
 
 def session_window_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -340,97 +376,7 @@ def streaming_user_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
             timeoutConf=GroupStateTimeout.NoTimeout,
         )
     )
-    sink = f"state_sink_{uuid.uuid4().hex[:8]}"
-    with _drain_confs(spark):
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return _drained_table(spark, sink)
-
-
-def transform_with_state_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-user running totals via transformWithStateInPandas — the
-    Spark 4 arbitrary-state API (state API v2): typed ValueState inside a
-    StatefulProcessor instead of applyInPandasWithState's single tuple.
-
-    Mirrors streaming_user_totals (same oracle): drained AvailableNow over
-    the static fixture the result equals the batch groupBy, so the v2
-    state machinery is gated by the ANSI oracle.  transformWithState
-    requires the RocksDB state store — pinned by the drain's
-    ``_drain_confs`` scope.
-
-    Gated: the state API v2 Python protocol needs ``protobuf``, which this
-    container does not ship (and installs are off-limits; re-probed each
-    round — still absent in rounds 1-11, last re-probed 2026-08-16 r11) — raises
-    NotImplementedError there, so it is NOT in the driver registry;
-    streaming_user_totals (applyInPandasWithState) carries the
-    oracle-gated stateful-streaming surface.  On a protobuf-equipped
-    cluster this function runs as-is (pytest exercises it when possible).
-    """
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-    except ImportError as exc:
-        raise NotImplementedError(
-            "transformWithStateInPandas needs the protobuf package for its "
-            "state-server protocol; it is not installed in this environment. "
-            "Use streaming_user_totals (applyInPandasWithState) instead."
-        ) from exc
-    from pyspark.sql.streaming.stateful_processor import StatefulProcessor
-
-    ev = read_events_stream(spark, sf_dir)
-
-    class TotalsProcessor(StatefulProcessor):
-        # self-contained: pickled by value (local class); pandas imported
-        # in-method so workers never resolve this package.
-        def init(self, handle):
-            self._totals = handle.getValueState("totals", "n long, cents long")
-
-        def handleInputRows(self, key, rows, timerValues):
-            import pandas as pd
-
-            n, cents = self._totals.get() if self._totals.exists() else (0, 0)
-            for pdf in rows:
-                n += len(pdf)
-                # exact integer cents — float sums would drift across batches
-                cents += int((pdf["value"] * 100).round().sum())
-            self._totals.update((n, cents))
-            yield pd.DataFrame(
-                {
-                    "user_id": [key[0]],
-                    "n_events": [n],
-                    "total_value": [cents / 100.0],
-                }
-            )
-
-        def close(self):
-            pass
-
-    agg = (
-        ev.select("user_id", "value")
-        .groupBy("user_id")
-        .transformWithStateInPandas(
-            TotalsProcessor(),
-            outputStructType="user_id long, n_events long, total_value double",
-            outputMode="Update",
-            timeMode="None",
-        )
-    )
-    sink = f"tws_sink_{uuid.uuid4().hex[:8]}"
-    with _drain_confs(spark, provider=_ROCKSDB_PROVIDER):
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return _drained_table(spark, sink)
+    return _drain_to_memory(spark, agg, "update")[0]
 
 
 def stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -471,7 +417,6 @@ def stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         "purchase_id",
         F.col("e_user").alias("user_id"),
     )
-    sink = f"ssj_sink_{uuid.uuid4().hex[:8]}"
     # Join state is WATERMARK-bounded (1 h delay + 30 min range), not
     # corpus-bounded — the same sizing argument as the outer topologies
     # (OUTER_JOIN_STATE_PARTITIONS comment above): profiled at sf0.1 the
@@ -479,18 +424,13 @@ def stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     # 2 batches ≈ 8.0 s/drain; 4 partitions + no no-data batch ≈ 1.2 s.
     # An INNER join's no-data batch only evicts state and emits NOTHING,
     # so skipping it cannot change the result (_drain_confs docstring).
-    with _drain_confs(
-        spark, partitions=OUTER_JOIN_STATE_PARTITIONS, no_data_batch=False
-    ):
-        q = (
-            joined.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return _drained_table(spark, sink)
+    return _drain_to_memory(
+        spark,
+        joined,
+        "append",
+        partitions=OUTER_JOIN_STATE_PARTITIONS,
+        no_data_batch=False,
+    )[0]
 
 
 def streaming_dedup_events(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -509,17 +449,7 @@ def streaming_dedup_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     dedup = ev.select("user_id", "event_type").dropDuplicates(
         ["user_id", "event_type"]
     )
-    sink = f"dedup_sink_{uuid.uuid4().hex[:8]}"
-    with _drain_confs(spark):
-        q = (
-            dedup.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return _drained_table(spark, sink)
+    return _drain_to_memory(spark, dedup, "append")[0]
 
 
 def stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -555,17 +485,9 @@ def stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
             "sum_value",
         )
     )
-    sink = f"stream_sink_{uuid.uuid4().hex[:8]}"
-    with _drain_confs(spark, partitions=BOUNDED_KEY_PARTITIONS):
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return _drained_table(spark, sink)
+    return _drain_to_memory(
+        spark, agg, "complete", partitions=BOUNDED_KEY_PARTITIONS
+    )[0]
 
 
 def streaming_sliding_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -585,17 +507,9 @@ def streaming_sliding_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_events",
         )
     )
-    sink = f"stream_sink_{uuid.uuid4().hex[:8]}"
-    with _drain_confs(spark, partitions=BOUNDED_KEY_PARTITIONS):
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return _drained_table(spark, sink)
+    return _drain_to_memory(
+        spark, agg, "complete", partitions=BOUNDED_KEY_PARTITIONS
+    )[0]
 
 
 def stateful_sessionize_stream(
@@ -690,17 +604,7 @@ def stateful_sessionize_stream(
             timeoutConf=GroupStateTimeout.EventTimeTimeout,
         )
     )
-    sink = f"sess_state_{uuid.uuid4().hex[:8]}"
-    with _drain_confs(spark):
-        q = (
-            sessions.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return _drained_table(spark, sink)
+    return _drain_to_memory(spark, sessions, "append")[0]
 
 
 def streaming_hourly_approx_uniques(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -729,17 +633,9 @@ def streaming_hourly_approx_uniques(spark: SparkSession, sf_dir: str) -> DataFra
             "n_events",
         )
     )
-    sink = f"stream_sink_{uuid.uuid4().hex[:8]}"
-    with _drain_confs(spark, partitions=BOUNDED_KEY_PARTITIONS):
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return _drained_table(spark, sink)
+    return _drain_to_memory(
+        spark, agg, "complete", partitions=BOUNDED_KEY_PARTITIONS
+    )[0]
 
 
 def batch_hourly_approx_uniques(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -839,17 +735,9 @@ def streaming_anomaly_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("bigint")
         .alias("is_anomaly"),
     )
-    sink = f"stream_sink_{uuid.uuid4().hex[:8]}"
-    with _drain_confs(spark, partitions=BOUNDED_KEY_PARTITIONS):
-        q = (
-            joined.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return _drained_table(spark, sink)
+    return _drain_to_memory(
+        spark, joined, "complete", partitions=BOUNDED_KEY_PARTITIONS
+    )[0]
 
 
 def streaming_topk_trending(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -885,17 +773,9 @@ def streaming_topk_trending(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_events",
         )
     )
-    sink = f"stream_sink_{uuid.uuid4().hex[:8]}"
-    with _drain_confs(spark, partitions=BOUNDED_KEY_PARTITIONS):
-        q = (
-            win.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    drained = _drained_table(spark, sink)
+    drained = _drain_to_memory(
+        spark, win, "complete", partitions=BOUNDED_KEY_PARTITIONS
+    )[0]
 
     from pyspark.sql.window import Window
 
@@ -1047,17 +927,9 @@ def stream_static_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
             "sum_value"
         ),
     )
-    sink = f"stream_sink_{uuid.uuid4().hex[:8]}"
-    with _drain_confs(spark, partitions=BOUNDED_KEY_PARTITIONS):
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return _drained_table(spark, sink)
+    return _drain_to_memory(
+        spark, agg, "complete", partitions=BOUNDED_KEY_PARTITIONS
+    )[0]
 
 
 def streaming_coreset_moments(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1121,30 +993,14 @@ def streaming_coreset_moments(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(F.col("q") * F.col("q")).alias("sum_q2"),
         )
     )
-    sink = f"coreset_sink_{uuid.uuid4().hex[:8]}"
-    with _drain_confs(spark, partitions=BOUNDED_KEY_PARTITIONS):
-        query = (
-            agg.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        query.awaitTermination()
-        n_in = sum(
-            int(
-                p.numInputRows
-                if hasattr(p, "numInputRows")
-                else p["numInputRows"]
-            )
-            for p in (query.recentProgress or [])
-        )
+    drained, n_in = _drain_to_memory(
+        spark, agg, "complete", partitions=BOUNDED_KEY_PARTITIONS
+    )
     if n_in == 0:
         raise RuntimeError(
             "streaming_coreset_moments: the embedding stream read 0 rows — "
             f"source layout under {sf_dir} no longer matches the reader"
         )
-    drained = _drained_table(spark, sink)
     return drained.select(
         "cell",
         "dim",
@@ -1344,33 +1200,16 @@ def streaming_neardup_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(jac >= 0.8)
         .select("doc_new", "doc_old", F.round(jac, 6).alias("jaccard"))
     )
-    sink = f"neardup_sink_{uuid.uuid4().hex[:8]}"
-    with _drain_confs(spark, partitions=BOUNDED_KEY_PARTITIONS):
-        q = (
-            verified.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        # recentProgress entries are StreamingQueryProgress objects on
-        # pyspark 4 (attribute access) and plain dicts on older lines
-        n_in = sum(
-            int(
-                p.numInputRows
-                if hasattr(p, "numInputRows")
-                else p["numInputRows"]
-            )
-            for p in (q.recentProgress or [])
-        )
+    drained, n_in = _drain_to_memory(
+        spark, verified, "append", partitions=BOUNDED_KEY_PARTITIONS
+    )
     if n_in == 0:
         raise RuntimeError(
             "streaming_neardup_lsh: the document stream read 0 rows — "
             f"source layout under {sf_dir} no longer matches the reader "
             "(ADVICE r6 #1: fail loudly instead of draining empty)"
         )
-    return _drained_table(spark, sink).orderBy("doc_new", "doc_old")
+    return drained.orderBy("doc_new", "doc_old")
 
 
 def streaming_dedup_user_days(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1407,37 +1246,24 @@ def streaming_dedup_user_days(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.min("day").cast("long").alias("first_day"),
         F.max("day").cast("long").alias("last_day"),
     )
-    sink = f"stream_sink_{uuid.uuid4().hex[:8]}"
     # Complete mode re-emits the FULL state every batch, and the 3650-day
     # delay means the no-data batch's advanced watermark still evicts
     # nothing — profiled at sf0.1 that batch re-wrote an identical sink
     # table for ~0.5 s of state-store commits.  Skip it: the drained
     # result is the data batch's complete emission either way.
-    with _drain_confs(
-        spark, partitions=BOUNDED_KEY_PARTITIONS, no_data_batch=False
-    ):
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        n_in = sum(
-            int(
-                p.numInputRows
-                if hasattr(p, "numInputRows")
-                else p["numInputRows"]
-            )
-            for p in (q.recentProgress or [])
-        )
+    drained, n_in = _drain_to_memory(
+        spark,
+        agg,
+        "complete",
+        partitions=BOUNDED_KEY_PARTITIONS,
+        no_data_batch=False,
+    )
     if n_in == 0:
         raise RuntimeError(
             "streaming_dedup_user_days: the event stream read 0 rows — "
             f"source layout under {sf_dir} no longer matches the reader"
         )
-    return _drained_table(spark, sink)
+    return drained
 
 
 def streaming_epoch_log_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1484,15 +1310,7 @@ def streaming_epoch_log_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
             .start()
         )
         q.awaitTermination()
-        n_in = sum(
-            int(
-                p.numInputRows
-                if hasattr(p, "numInputRows")
-                else p["numInputRows"]
-            )
-            for p in (q.recentProgress or [])
-        )
-    if n_in == 0:
+    if _input_rows(q) == 0:
         raise RuntimeError(
             "streaming_epoch_log_sink: the event stream read 0 rows — "
             f"source layout under {sf_dir} no longer matches the reader"
@@ -1690,7 +1508,6 @@ def streaming_outer_join_attribution(spark: SparkSession, sf_dir: str) -> DataFr
         # value-hash hazard of invariant 3
         F.coalesce(F.col("error_id"), F.lit(-1)).cast("long").alias("error_id"),
     )
-    sink = f"soja_sink_{uuid.uuid4().hex[:8]}"
     # OUTER_JOIN_STATE_PARTITIONS: join state is WATERMARK-bounded (live
     # rows = arrival-rate x the ~1.5 h horizon the range condition +
     # delay admit), not corpus-bounded, so state stays small at any
@@ -1699,16 +1516,10 @@ def streaming_outer_join_attribution(spark: SparkSession, sf_dir: str) -> DataFr
     # 9.6 -> 2.8 s at sf0.01; 8 -> 4 takes the sf0.1 warm drain
     # 3.4 -> 2.5 s, flat below 4).  A production deployment sizes this
     # to horizon volume, which _drain_confs parameterizes.
-    with _drain_confs(spark, partitions=OUTER_JOIN_STATE_PARTITIONS):
-        q = (
-            joined.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return _drained_table(spark, sink).where(F.col("user_id") >= 0)
+    rows, _ = _drain_to_memory(
+        spark, joined, "append", partitions=OUTER_JOIN_STATE_PARTITIONS
+    )
+    return rows.where(F.col("user_id") >= 0)
 
 
 def streaming_full_outer_reconcile(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1775,18 +1586,11 @@ def streaming_full_outer_reconcile(spark: SparkSession, sf_dir: str) -> DataFram
         F.coalesce(F.col("purchase_id"), F.lit(-1)).cast("long").alias("purchase_id"),
         F.coalesce(F.col("error_id"), F.lit(-1)).cast("long").alias("error_id"),
     )
-    sink = f"sfor_sink_{uuid.uuid4().hex[:8]}"
     # see streaming_outer_join_attribution's sizing note
-    with _drain_confs(spark, partitions=OUTER_JOIN_STATE_PARTITIONS):
-        q = (
-            joined.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return _drained_table(spark, sink).where(F.col("user_id") >= 0)
+    rows, _ = _drain_to_memory(
+        spark, joined, "append", partitions=OUTER_JOIN_STATE_PARTITIONS
+    )
+    return rows.where(F.col("user_id") >= 0)
 
 
 _ROCKSDB_PROVIDER = (
@@ -1821,19 +1625,14 @@ def rocksdb_daily_type_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("cents_sum"),
         )
     )
-    sink = f"rocksdb_sink_{uuid.uuid4().hex[:8]}"
-    with _drain_confs(
-        spark, partitions=BOUNDED_KEY_PARTITIONS, provider=_ROCKSDB_PROVIDER
-    ):
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return _drained_table(spark, sink).orderBy("event_type", "day")
+    rows, _ = _drain_to_memory(
+        spark,
+        agg,
+        "update",
+        partitions=BOUNDED_KEY_PARTITIONS,
+        provider=_ROCKSDB_PROVIDER,
+    )
+    return rows.orderBy("event_type", "day")
 
 
 def dynamic_gap_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:

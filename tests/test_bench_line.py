@@ -102,19 +102,23 @@ def test_bench_warmup_imports_match_inventory():
     """Benchmark-accounting lint (VERDICT_r11 'What's wrong' #1,
     condition b): bench.py's warmup may pre-build ONLY the standing
     infrastructure named in BASELINE.md's 'Unbilled warmup inventory'.
-    Any new import inside bench.main() — the warmup + timing body —
-    fails here until a verdict item sanctions it AND the inventory
-    table gains a row for it."""
+    Any new import inside bench.warm() (the warmup every timing tool
+    shares) or bench.main() (the timing body) fails here until a
+    verdict item sanctions it AND the inventory table gains a row for
+    it."""
     import ast
     import os
 
     bench_path = os.path.join(os.path.dirname(bench.__file__), "bench.py")
     tree = ast.parse(open(bench_path).read())
-    (main_fn,) = [
-        n for n in tree.body if isinstance(n, ast.FunctionDef) and n.name == "main"
+    fns = [
+        n
+        for n in tree.body
+        if isinstance(n, ast.FunctionDef) and n.name in ("warm", "main")
     ]
+    assert sorted(f.name for f in fns) == ["main", "warm"]
     imported = set()
-    for node in ast.walk(main_fn):
+    for node in (n for fn in fns for n in ast.walk(fn)):
         if isinstance(node, ast.ImportFrom):
             for alias in node.names:
                 imported.add(f"{node.module}.{alias.name}")
@@ -149,7 +153,7 @@ def test_bench_warmup_imports_match_inventory():
     }
     unexpected = imported - allowed
     assert not unexpected, (
-        "bench.main() imports outside the frozen unbilled-warmup "
+        "bench.warm()/main() import outside the frozen unbilled-warmup "
         f"inventory: {sorted(unexpected)} — a new warmup pre-build needs "
         "a verdict sanction plus a BASELINE.md inventory row first"
     )

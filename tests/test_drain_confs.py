@@ -3,7 +3,10 @@ and the streaming source-schema memo.
 
 - every drain the package starts does so inside ``_drain_confs`` (AST
   lint), so none can skip the state-partition pin or the fork-free
-  checkpoint manager;
+  checkpoint manager; the package has an exact number of start sites,
+  and a ``writeStream…format("memory")`` chain appears only in
+  ``_drain_to_memory`` and ``synthetic_stream_rollup``;
+- no memory-sink temp view outlives the drain that made it;
 - the scope restores the caller's confs, serializes drains on one
   session, lets cloned sessions overlap, and refuses to start next to a
   query that is already running;
@@ -101,18 +104,93 @@ def test_lint_flags_a_drain_outside_the_scope():
     assert _unscoped_drain_starts(ast.parse(src)) == (3, [5, 6])
 
 
-def test_every_package_drain_starts_inside_drain_confs():
-    total, offenders = 0, []
+def _package_trees():
     for base, _, files in os.walk(PACKAGE):
-        for name in files:
+        for name in sorted(files):
             if name.endswith(".py"):
                 path = os.path.join(base, name)
                 with open(path) as fh:
-                    found, bad = _unscoped_drain_starts(ast.parse(fh.read()))
-                total += found
-                offenders += [f"{os.path.relpath(path, REPO)}:{ln}" for ln in bad]
+                    yield os.path.relpath(path, REPO), ast.parse(fh.read())
+
+
+# The package's drain start sites: _drain_to_memory, synthetic_stream_rollup,
+# the manifest foreachBatch, epoch-log and toTable drains in windows.py, and
+# the ingest foreachBatch.  A new drain either goes through _drain_to_memory
+# or is a new sink flavour, which changes this count on purpose.
+PACKAGE_DRAIN_STARTS = 6
+
+
+def test_every_package_drain_starts_inside_drain_confs():
+    total, offenders = 0, []
+    for rel, tree in _package_trees():
+        found, bad = _unscoped_drain_starts(tree)
+        total += found
+        offenders += [f"{rel}:{ln}" for ln in bad]
     assert not offenders, f"drains started outside _drain_confs: {offenders}"
-    assert total >= 20, f"lint found only {total} drain starts — is it still matching?"
+    assert total == PACKAGE_DRAIN_STARTS, f"lint found {total} drain starts"
+
+
+def _memory_sink_chains(tree: ast.AST) -> list[str]:
+    """Names of the functions holding a ``writeStream…format("memory")``
+    call."""
+    found = []
+
+    def visit(node: ast.AST, fn: str) -> None:
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+            fn = node.name
+        if (
+            isinstance(node, ast.Call)
+            and isinstance(node.func, ast.Attribute)
+            and node.func.attr == "format"
+            and node.args
+            and isinstance(node.args[0], ast.Constant)
+            and node.args[0].value == "memory"
+            and _reaches_write_stream(node.func.value)
+        ):
+            found.append(fn)
+        for child in ast.iter_child_nodes(node):
+            visit(child, fn)
+
+    visit(tree, "<module>")
+    return found
+
+
+def test_memory_sinks_start_only_in_the_drain_helper():
+    """Memory-sink drains go through ``_drain_to_memory``; the synthetic
+    stream is the one exception (it needs processAllAvailable, which
+    Trigger.AvailableNow does not match on a Python source)."""
+    sites = sorted(
+        (rel, fn) for rel, tree in _package_trees() for fn in _memory_sink_chains(tree)
+    )
+    assert sites == [
+        (os.path.join("mini_pandas_spark", "sources", "synthetic.py"),
+         "synthetic_stream_rollup"),
+        (os.path.join("mini_pandas_spark", "streaming", "windows.py"),
+         "_drain_to_memory"),
+    ]
+
+
+def _temp_views(spark) -> set:
+    return {t.name for t in spark.catalog.listTables() if t.isTemporary}
+
+
+@pytest.mark.parametrize(
+    "name",
+    [
+        "synthetic_stream_rollup",
+        "streaming_hourly_counts",
+        "streaming_dedup_user_days",
+        "streaming_epoch_log_sink",
+        "state_store_user_totals",
+    ],
+)
+def test_drains_leave_no_temp_view(spark, sf_dir, name):
+    from mini_pandas_spark.queries import queries
+
+    before = _temp_views(spark)
+    out = queries()[name](spark, sf_dir)
+    assert _temp_views(spark) == before
+    assert out.count() > 0  # the read-back stays valid after the drop
 
 
 # ---------------------------------------------------------------- scope

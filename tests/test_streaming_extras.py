@@ -4,21 +4,11 @@ state cleanup plumbing."""
 
 import os
 
-import pytest
 from pyspark.sql import functions as F
 
 from mini_pandas_spark.streaming import read_events_stream
 
 SF = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
-
-
-def _has_protobuf() -> bool:
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
 
 
 def test_foreach_batch_sink(spark, tmp_path):
@@ -63,36 +53,6 @@ def test_streaming_query_progress_observable(spark):
     q.awaitTermination()
     assert q.lastProgress is not None
     assert q.lastProgress["numInputRows"] == 1000
-
-
-def test_transform_with_state_totals_gate_or_run(spark):
-    """State API v2 (transformWithStateInPandas): where protobuf exists it
-    must equal the batch groupBy; in this container (no protobuf, installs
-    off-limits) the documented NotImplementedError gate must fire —
-    never a raw worker crash."""
-    from mini_pandas_spark.sources import load_table
-    from mini_pandas_spark.streaming.windows import transform_with_state_totals
-
-    if not _has_protobuf():
-        with pytest.raises(NotImplementedError, match="protobuf"):
-            transform_with_state_totals(spark, SF)
-        return
-
-    got = {
-        r["user_id"]: (r["n_events"], r["total_value"])
-        for r in transform_with_state_totals(spark, SF).collect()
-    }
-    ev = load_table(spark, SF, "events")
-    want = {
-        r["user_id"]: (r["n"], r["tv"])
-        for r in ev.groupBy("user_id")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            (F.sum(F.round(F.col("value") * 100).cast("long")) / 100.0).alias("tv"),
-        )
-        .collect()
-    }
-    assert got == want
 
 
 def test_synthetic_stream_drains_exactly_once(spark):

@@ -6,9 +6,10 @@ Usage:
     python tools/profile_queries.py --plans DIR q1   # also dump explain()
     python tools/profile_queries.py --all            # the whole HEADLINE list
 
-Methodology matches bench.py (same session confs, same unbilled warmups,
-noop-sink materialization) so numbers are comparable with BASELINE.md
-close tables, but each query is timed REPS times and the min/median are
+Methodology is bench.py's (same session confs, the same unbilled
+``bench.warm``, the same noop ``bench.materialize``), so numbers are
+comparable with BASELINE.md close tables, but each query is timed REPS
+times and the min/median are
 reported — isolating steady-state per-query cost from run-order noise.
 Also records the number of Spark jobs each query launches (scheduling
 overhead is a first-order cost at sf0.1 fixture sizes).
@@ -24,56 +25,9 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from bench import HEADLINE, materialize, warm
 from mini_pandas_spark.queries import queries
 from mini_pandas_spark.session import get_spark
-
-
-def materialize(df) -> None:
-    df.write.format("noop").mode("overwrite").save()
-
-
-def run_warmups(spark, sf_dir: str, qs) -> None:
-    """The same unbilled warmups bench.py performs."""
-    from pyspark.sql import functions as F
-    from pyspark.sql.functions import pandas_udf
-
-    from mini_pandas_spark.sources import TABLE_NAMES, load_table
-
-    materialize(qs["flagship_filter"](spark, sf_dir))
-    warm_udf = pandas_udf(lambda s: s * 1, "long")
-    materialize(
-        spark.range(1000).repartition(64).select(warm_udf(F.col("id")).alias("v"))
-    )
-    for t in TABLE_NAMES:
-        materialize(load_table(spark, sf_dir, t))
-    warm_sf = os.path.join(os.path.dirname(sf_dir.rstrip("/")), "sf0.001")
-    warm_dir = warm_sf if os.path.isdir(warm_sf) else sf_dir
-    qs["streaming_hourly_counts"](spark, warm_dir).count()
-    from mini_pandas_spark.streaming.windows import (
-        _events_dir_with_sentinels,
-        _standing_index_tables,
-    )
-
-    _standing_index_tables(spark, sf_dir)
-    _events_dir_with_sentinels(spark, sf_dir)
-    from mini_pandas_spark.streaming.state_reader import (
-        build_standing_state_checkpoints,
-    )
-
-    build_standing_state_checkpoints(spark, sf_dir)
-    from mini_pandas_spark.streaming.ingest import _ingest_artifacts
-
-    _ingest_artifacts(spark, sf_dir)
-    from mini_pandas_spark.operators.layout import (
-        hilbert_layout_table,
-        quantized_layout_table,
-        zorder_layout_table,
-    )
-
-    for build in (zorder_layout_table, hilbert_layout_table, quantized_layout_table):
-        build(spark, sf_dir)
-    qs["streaming_neardup_lsh"](spark, warm_dir).count()
-    qs["manifest_roundtrip_stats"](spark, warm_dir).count()
 
 
 def main() -> None:
@@ -90,8 +44,6 @@ def main() -> None:
     spark = get_spark("mini-pandas-spark-profile")
     qs = queries()
     if args.all:
-        from bench import HEADLINE
-
         names = list(HEADLINE)
     else:
         names = args.names
@@ -99,7 +51,7 @@ def main() -> None:
     if unknown:
         raise SystemExit(f"unknown queries: {unknown}")
 
-    run_warmups(spark, sf_dir, qs)
+    warm(spark, sf_dir)
 
     sc = spark.sparkContext
     tracker = sc.statusTracker()

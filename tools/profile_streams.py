@@ -36,6 +36,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from bench import materialize, warm
 from mini_pandas_spark.queries import queries
 from mini_pandas_spark.session import get_spark
 
@@ -63,10 +64,6 @@ STREAM_QUERIES = [
     "streaming_table_sink_daily",
     "incremental_ingest_totals",
 ]
-
-
-def materialize(df) -> None:
-    df.write.format("noop").mode("overwrite").save()
 
 
 def clones_since_boot() -> int:
@@ -190,9 +187,7 @@ def main() -> None:
         raise SystemExit(f"unknown queries: {unknown}")
 
     if not args.skip_warmups:
-        from profile_queries import run_warmups
-
-        run_warmups(spark, sf_dir, qs)
+        warm(spark, sf_dir)
 
     tap = _ProgressTap()
     spark.streams.addListener(tap.listener())

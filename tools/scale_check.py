@@ -76,21 +76,22 @@ def generate(sf1_dir: str, src_dir: str) -> None:
     """Replicate src tables with shifted unique keys and per-replica
     letter-rotated text.  Deterministic: shift = (max_key + 1) *
     replica, rotation = replica index — no randomness, re-runs are
-    byte-identical."""
+    byte-identical.
+
+    Only ``MARKER`` proves a complete fixture: it is written after the
+    last table, so without it every table is (re)written, even where a
+    table dir exists — an interrupted run leaves dirs that can be
+    half-written."""
     from pyspark.sql import functions as F
 
     from mini_pandas_spark.session import get_spark
     from mini_pandas_spark.sources import load_table
 
-    missing = [
-        t for t in TABLE_KEYS
-        if not os.path.exists(os.path.join(sf1_dir, f"{t}.parquet"))
-    ]
-    if not missing:
+    if os.path.exists(os.path.join(sf1_dir, MARKER)):
         return
     os.makedirs(sf1_dir, exist_ok=True)
     spark = get_spark("scale-check-generate")
-    for table in missing:
+    for table in TABLE_KEYS:
         keys = TABLE_KEYS[table]
         n_rep = REPLICAS[table]
         src = load_table(spark, src_dir, table)
@@ -127,15 +128,13 @@ def generate(sf1_dir: str, src_dir: str) -> None:
 def child(cpus: int, sf1_dir: str, names: list[str], confs: list[str],
           reps: int) -> None:
     os.environ["SPARK_GRAFT_CPUS"] = str(cpus)
+    from bench import materialize
     from mini_pandas_spark.queries import queries
     from mini_pandas_spark.session import get_spark
 
     extra = dict(kv.partition("=")[::2] for kv in confs)
     spark = get_spark(f"scale-check-{cpus}", cpus=cpus, extra_confs=extra)
     qs = queries()
-
-    def materialize(df):
-        df.write.format("noop").mode("overwrite").save()
 
     # warm: JVM/codegen + one scan of each fixture table
     for t in TABLE_KEYS:

@@ -29,14 +29,13 @@ import shutil
 import sys
 import tempfile
 import time
-import uuid
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
-from mini_pandas_spark.streaming.windows import _drain_confs
+from mini_pandas_spark.streaming.windows import _drain_to_memory
 
 BASE = "/root/testdata/sf0.1"
 ROCKSDB = (
@@ -98,25 +97,15 @@ def drain(spark: SparkSession, src: str, provider: str) -> dict:
         .alias("cents_sum"),
     )
     ck = tempfile.mkdtemp(prefix="stress_stream_ck_")
-    sink = f"stress_{uuid.uuid4().hex[:8]}"
     t0 = time.time()
-    with _drain_confs(spark, partitions=8, provider=provider):
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("update")
-            .option("checkpointLocation", ck)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    rows, _ = _drain_to_memory(
+        spark, agg, "update", checkpoint=ck, partitions=8, provider=provider
+    )
     wall = time.time() - t0
     # update-mode sink re-emits updated keys per batch; final value per key
     drained = {
-        (r.event_type, r.day): (r.n_events, r.cents_sum)
-        for r in spark.table(sink).collect()
+        (r.event_type, r.day): (r.n_events, r.cents_sum) for r in rows.collect()
     }
-    spark.catalog.dropTempView(sink)
     batch = spark.read.parquet(src)
     expect = {
         (r.event_type, r.day): (r.n_events, r.cents_sum)
