@@ -1,14 +1,7 @@
-"""Session-memo plumbing shared by every stage-table builder
-(CLAUDE.md invariant 9): fixture fingerprints for cache keys and the
-bounded-LRU eviction loop that also deletes on-disk directories.
-
-One implementation instead of per-module copies — the round-10 review
-found the fingerprint helper pasted three times and the eviction loop
-four times; round 11 migrated every remaining copy here (VERDICT_r10
-item 3): the per-table fingerprint wrappers in dedup/similarity/
-windows/relational now delegate to ``table_fingerprint``, and every
-LRU pop loop runs through ``evict_lru``/``evict_lru_dirs`` (catalog
-drops and other extra teardown ride the ``teardown`` callback)."""
+"""Session memos for stage tables, staged fixtures and driver-side
+artifacts (CLAUDE.md invariant 9): one ``SessionMemo`` class owns the
+cache key, the LRU bound and the teardown of what an entry owns, and
+``scratch_dir`` is where every owned directory lives."""
 
 from __future__ import annotations
 
@@ -16,7 +9,7 @@ import os
 import shutil
 import tempfile
 from collections import OrderedDict
-from typing import Callable, Optional
+from typing import Any, Callable, NamedTuple
 
 
 def scratch_dir(prefix: str) -> str:
@@ -70,31 +63,67 @@ def table_fingerprint(sf_dir: str, name: str):
         return None
 
 
-def evict_lru(
-    memo: OrderedDict,
-    max_entries: int,
-    teardown: Optional[Callable] = None,
-) -> None:
-    """Pop least-recently-used memo entries past ``max_entries``.
+class Owned(NamedTuple):
+    """A built value plus what its memo entry owns: scratch dirs
+    (rmtree'd, and checked on every hit) and catalog tables (dropped)
+    when the entry is evicted or found stale.  A builder returns a bare
+    value when the entry owns nothing."""
 
-    ``teardown(value)`` runs per evicted entry for memos owning
-    external resources (on-disk dirs, catalog tables); plain DataFrame
-    memos pass no teardown and simply drop the reference.  The one
-    eviction loop repo-wide — per-module copies were migrated here in
-    round 11."""
-    while len(memo) > max_entries:
-        _, value = memo.popitem(last=False)
-        if teardown is not None:
-            teardown(value)
+    value: Any
+    dirs: tuple = ()
+    tables: tuple = ()
 
 
-def evict_lru_dirs(memo: OrderedDict, max_entries: int) -> None:
-    """``evict_lru`` for the common dir-owning shape: memo values are
-    always TUPLES of dirs (invariant 10's teardown recipe), each
-    rmtree'd on eviction."""
+class SessionMemo:
+    """Bounded LRU get-or-build memo: the one way this package caches
+    anything across calls.
 
-    def _rm(dirs) -> None:
-        for d in dirs:
-            shutil.rmtree(d, ignore_errors=True)
+    The key is ``(*kind, applicationId, abspath(sf_dir), fingerprint of
+    each named fixture table)``; ``spark=None`` leaves the applicationId
+    out for values no session owns (parquet schemas, driver-side
+    centroids).  A hit refreshes the entry's LRU position.  A table that
+    cannot be fingerprinted means no key could notice it being
+    rewritten, so the value is built and returned but not stored.  A hit
+    whose owned dirs no longer all exist is torn down and rebuilt.  Past
+    ``max_entries`` the least recently used entries go, each with its
+    dirs rmtree'd and its tables dropped through the calling session."""
 
-    evict_lru(memo, max_entries, teardown=_rm)
+    def __init__(self, max_entries: int):
+        self.max_entries = max_entries
+        self._entries: OrderedDict = OrderedDict()
+
+    def __len__(self) -> int:
+        return len(self._entries)
+
+    def __iter__(self):
+        return iter(list(self._entries))
+
+    def __getitem__(self, key) -> Owned:
+        return self._entries[key]
+
+    def get(self, spark, sf_dir: str, tables: tuple, build: Callable, *kind):
+        """The memoized value for ``kind`` over ``sf_dir``'s ``tables``,
+        calling ``build()`` (a value or an ``Owned``) on a miss."""
+        fps = tuple(table_fingerprint(sf_dir, t) for t in tables)
+        app = () if spark is None else (spark.sparkContext.applicationId,)
+        key = (*kind, *app, os.path.abspath(sf_dir), *fps)
+        hit = self._entries.get(key)
+        if hit is not None:
+            if all(os.path.isdir(d) for d in hit.dirs):
+                self._entries.move_to_end(key)
+                return hit.value
+            _teardown(spark, self._entries.pop(key, hit))
+        built = build()
+        entry = built if isinstance(built, Owned) else Owned(built)
+        if None not in fps:
+            self._entries[key] = entry
+            while len(self._entries) > self.max_entries:
+                _teardown(spark, self._entries.popitem(last=False)[1])
+        return entry.value
+
+
+def _teardown(spark, entry: Owned) -> None:
+    for tbl in entry.tables:
+        spark.sql(f"DROP TABLE IF EXISTS {tbl}")
+    for d in entry.dirs:
+        shutil.rmtree(d, ignore_errors=True)

@@ -29,14 +29,12 @@ partitionings, so the driver's rows-only checks are reproducible.
 
 from __future__ import annotations
 
-from collections import OrderedDict
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..functions import round_scaled, tokens
-from ..memo import evict_lru
+from ..memo import SessionMemo
 from ..sources import load_table
 
 N_PERM = 32
@@ -80,30 +78,21 @@ def _docsets_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     ngram_jaccard_pairs, boilerplate_shingle_stats,
     decontaminate_ngram_overlap).  At 100 TB this is the persisted
     shingle stage table the near-dup family reads many times."""
-    key = (
-        "docsets",
-        spark.sparkContext.applicationId,
-        sf_dir,
-        _documents_fingerprint(sf_dir),
-    )
-    hit = _SKETCH_MEMO.get(key)
-    if hit is not None:
-        _SKETCH_MEMO.move_to_end(key)
-        return hit
-    d = load_table(spark, sf_dir, "documents")
-    # No pre-compute repartition here (unlike the minhash/simhash sketch
-    # passes): the tokenize+shingle build is cheap enough that shuffling
-    # the raw text first costs more than the parallelism buys — measured
-    # +0.3-0.6s on every docsets consumer at sf0.1 when tried.
-    out = (
-        d.select("doc_id", tokens(F.col("text")).alias("__ts"))
-        .select("doc_id", shingles(F.col("__ts")).alias("ss"))
-        .withColumn("sz", F.size("ss"))
-        .localCheckpoint(eager=False)
-    )
-    _SKETCH_MEMO[key] = out
-    evict_lru(_SKETCH_MEMO, _SKETCH_MEMO_MAX)
-    return out
+
+    def build() -> DataFrame:
+        d = load_table(spark, sf_dir, "documents")
+        # No pre-compute repartition here (unlike the minhash/simhash sketch
+        # passes): the tokenize+shingle build is cheap enough that shuffling
+        # the raw text first costs more than the parallelism buys — measured
+        # +0.3-0.6s on every docsets consumer at sf0.1 when tried.
+        return (
+            d.select("doc_id", tokens(F.col("text")).alias("__ts"))
+            .select("doc_id", shingles(F.col("__ts")).alias("ss"))
+            .withColumn("sz", F.size("ss"))
+            .localCheckpoint(eager=False)
+        )
+
+    return _SKETCH_MEMO.get(spark, sf_dir, ("documents",), build, "docsets")
 
 
 def _shingle_table(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -205,83 +194,65 @@ def minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     consume it, and re-running the band join + verification per consumer
     is repeated work a pipeline would persist once.
     """
-    key = (
-        "lsh_pairs",
-        spark.sparkContext.applicationId,
-        sf_dir,
-        _documents_fingerprint(sf_dir),
-    )
-    hit = _SKETCH_MEMO.get(key)
-    if hit is not None:
-        _SKETCH_MEMO.move_to_end(key)
-        return hit
-    per_doc = _minhash_sketch_table(spark, sf_dir)
-    melted = _minhash_bands(per_doc)
-    cand = (
-        melted.alias("a")
-        .join(
-            melted.alias("b"),
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.sig") == F.col("b.sig"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .distinct()
-    )
 
-    sets = per_doc.select("doc_id", "hashes", "sz")
-    inter = F.size(F.array_intersect(F.col("ha"), F.col("hb"))).cast("long")
-    jac = inter / (F.col("sz_a") + F.col("sz_b") - inter)
-    out = (
-        cand.join(
-            sets.select(
-                F.col("doc_id").alias("doc_a"),
-                F.col("hashes").alias("ha"),
-                F.col("sz").alias("sz_a"),
-            ),
-            "doc_a",
+    def build() -> DataFrame:
+        per_doc = _minhash_sketch_table(spark, sf_dir)
+        melted = _minhash_bands(per_doc)
+        cand = (
+            melted.alias("a")
+            .join(
+                melted.alias("b"),
+                (F.col("a.band") == F.col("b.band"))
+                & (F.col("a.sig") == F.col("b.sig"))
+                & (F.col("a.doc_id") < F.col("b.doc_id")),
+            )
+            .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
+            .distinct()
         )
-        .join(
-            sets.select(
-                F.col("doc_id").alias("doc_b"),
-                F.col("hashes").alias("hb"),
-                F.col("sz").alias("sz_b"),
-            ),
-            "doc_b",
+
+        sets = per_doc.select("doc_id", "hashes", "sz")
+        inter = F.size(F.array_intersect(F.col("ha"), F.col("hb"))).cast("long")
+        jac = inter / (F.col("sz_a") + F.col("sz_b") - inter)
+        return (
+            cand.join(
+                sets.select(
+                    F.col("doc_id").alias("doc_a"),
+                    F.col("hashes").alias("ha"),
+                    F.col("sz").alias("sz_a"),
+                ),
+                "doc_a",
+            )
+            .join(
+                sets.select(
+                    F.col("doc_id").alias("doc_b"),
+                    F.col("hashes").alias("hb"),
+                    F.col("sz").alias("sz_b"),
+                ),
+                "doc_b",
+            )
+            .filter(jac >= 0.8)
+            .select("doc_a", "doc_b", F.round(jac, 6).alias("jaccard"))
+            .localCheckpoint(eager=False)
         )
-        .filter(jac >= 0.8)
-        .select("doc_a", "doc_b", F.round(jac, 6).alias("jaccard"))
-        .localCheckpoint(eager=False)
-    )
-    _SKETCH_MEMO[key] = out
-    evict_lru(_SKETCH_MEMO, _SKETCH_MEMO_MAX)
-    return out
+
+    return _SKETCH_MEMO.get(spark, sf_dir, ("documents",), build, "lsh_pairs")
 
 
-# Session-scoped sketch-table memo (the quantizer-memo recipe,
-# similarity.py:_QUANTIZER_MEMO): SIX registered queries consume the
+# Session-scoped sketch-table memo: SIX registered queries consume the
 # per-doc MinHash sketch (minhash_lsh_pairs, neardup_flow_matrix,
 # neardup_survivors_quality, neardup_cluster_sizes,
 # incremental_neardup_lsh, dedup_rate consumers) — without the memo each
-# re-runs the Arrow sketch pass over the corpus.  Keyed on
-# (applicationId, sf_dir, fixture fingerprint) so a new session or a
-# regenerated fixture can never see a stale frame; LRU-bounded.  At
-# 100 TB this is the materialized sketch stage-table every dedup
-# pipeline persists once and joins many times.  Local-mode assumption
-# (ADVICE r6 #3): see similarity._EMB_PAIRS_MEMO — localCheckpointed
-# entries don't survive executor loss; a cluster port persists to
-# parquet instead.
-_SKETCH_MEMO: OrderedDict = OrderedDict()
-_SKETCH_MEMO_MAX = 12  # 3 entry kinds x up to 3 sf fixtures + slack
-
-
-def _documents_fingerprint(sf_dir: str):
-    """(mtime_ns, size) change-detector for the documents fixture —
-    never reads data.  Delegates to the shared memo.table_fingerprint
-    (round-11 migration; VERDICT_r10 item 3)."""
-    from ..memo import table_fingerprint
-
-    return table_fingerprint(sf_dir, "documents")
+# re-runs the Arrow sketch pass over the corpus.  At 100 TB this is the
+# materialized sketch stage-table every dedup pipeline persists once and
+# joins many times.  Local-mode assumption (ADVICE r6 #3): entries hold
+# lazily localCheckpointed frames whose lineage is truncated — on a
+# multi-executor cluster an executor loss invalidates checkpoint blocks
+# and a later memo hit would fail with "checkpoint block not found"
+# without self-healing.  Fine on local[N] (blocks live in the one JVM
+# for the session's lifetime); a production port persists these stage
+# tables to parquet (the streaming standing-index tables show that
+# shape).  The same holds for the LM score and embedding pair memos.
+_SKETCH_MEMO = SessionMemo(12)  # 3 entry kinds x up to 3 sf fixtures + slack
 
 
 _SKETCH_SCHEMA = "doc_id long, mh array<long>, hashes array<long>, sz long"
@@ -347,36 +318,27 @@ def _minhash_sketch_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc through a 32-aggregate groupBy (sf0.1: ~4s → ~1s).  The hash is
     crc32 (deterministic, C-speed); perms are numpy broadcast mins.
     """
-    key = (
-        "sketch",
-        spark.sparkContext.applicationId,
-        sf_dir,
-        _documents_fingerprint(sf_dir),
-    )
-    hit = _SKETCH_MEMO.get(key)
-    if hit is not None:
-        _SKETCH_MEMO.move_to_end(key)
-        return hit
-    d = load_table(spark, sf_dir, "documents")
-    sketch = _sketch_map_fn()
 
-    # The fixture ships one parquet row group → a single scan task; the
-    # sketch pass is CPU-bound, so spread it across workers first (the
-    # doc table is tiny relative to the compute per doc).
-    n_part = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    per_doc = (
-        d.select("doc_id", "text")
-        .repartition(n_part)
-        .mapInPandas(sketch, schema=_SKETCH_SCHEMA)
-    )
-    # per_doc feeds three DAG branches (bands, and both sides of the
-    # verification join) — persist the small per-doc sketch so the text
-    # pass runs exactly once.  At 100 TB this is a materialized stage
-    # table instead of a cache.
-    out = per_doc.localCheckpoint(eager=False)
-    _SKETCH_MEMO[key] = out
-    evict_lru(_SKETCH_MEMO, _SKETCH_MEMO_MAX)
-    return out
+    def build() -> DataFrame:
+        d = load_table(spark, sf_dir, "documents")
+        sketch = _sketch_map_fn()
+
+        # The fixture ships one parquet row group → a single scan task; the
+        # sketch pass is CPU-bound, so spread it across workers first (the
+        # doc table is tiny relative to the compute per doc).
+        n_part = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
+        per_doc = (
+            d.select("doc_id", "text")
+            .repartition(n_part)
+            .mapInPandas(sketch, schema=_SKETCH_SCHEMA)
+        )
+        # per_doc feeds three DAG branches (bands, and both sides of the
+        # verification join) — persist the small per-doc sketch so the text
+        # pass runs exactly once.  At 100 TB this is a materialized stage
+        # table instead of a cache.
+        return per_doc.localCheckpoint(eager=False)
+
+    return _SKETCH_MEMO.get(spark, sf_dir, ("documents",), build, "sketch")
 
 
 def _minhash_bands(per_doc: DataFrame) -> DataFrame:

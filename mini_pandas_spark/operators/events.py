@@ -18,6 +18,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions import cents, decimal_sum
+from ..memo import Owned, SessionMemo, scratch_dir
 from ..sources import load_table
 
 _FMT = "yyyy-MM-dd HH:mm:ss"
@@ -2480,10 +2481,9 @@ def pii_pseudonymize_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-from collections import OrderedDict
-
-_CORRUPT_FEED_DIRS: OrderedDict = OrderedDict()
-_CORRUPT_FEED_DIRS_MAX = 4
+# JSONL feed dirs per (session, fixture): a per-call mkdtemp would leak
+# one feed dir per run of a 344-query sweep.
+_CORRUPT_FEED_DIRS = SessionMemo(4)
 
 
 def corrupt_record_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2508,18 +2508,8 @@ def corrupt_record_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     map-side-combinable aggregations.
     """
     import os
-    import shutil
-    from ..memo import scratch_dir
 
-    from ..streaming.windows import _events_fingerprint
-
-    key = (
-        spark.sparkContext.applicationId,
-        os.path.abspath(sf_dir),
-        _events_fingerprint(sf_dir),
-    )
-    root = _CORRUPT_FEED_DIRS.get(key)
-    if root is None or not os.path.isdir(root):
+    def build() -> Owned:
         ev = load_table(spark, sf_dir, "events").select(
             "event_id", "user_id", "event_type", cents("value").alias("cents")
         )
@@ -2531,21 +2521,9 @@ def corrupt_record_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         root = os.path.join(scratch_dir("corrupt_audit_"), "feed")
         ev.select(line.alias("value")).write.mode("overwrite").text(root)
-        # invariant 9: keyed on (appId, fixture fingerprint), LRU-bounded
-        # with rmtree on evict — a per-call mkdtemp would leak one feed
-        # dir per run of a 344-query sweep
-        _CORRUPT_FEED_DIRS[key] = root
-        from ..memo import evict_lru
+        return Owned(root, dirs=(os.path.dirname(root),))
 
-        evict_lru(
-            _CORRUPT_FEED_DIRS,
-            _CORRUPT_FEED_DIRS_MAX,
-            teardown=lambda r: shutil.rmtree(
-                os.path.dirname(r), ignore_errors=True
-            ),
-        )
-    else:
-        _CORRUPT_FEED_DIRS.move_to_end(key)
+    root = _CORRUPT_FEED_DIRS.get(spark, sf_dir, ("events",), build)
     back = (
         spark.read.schema(
             "event_id bigint, user_id bigint, event_type string, "

@@ -24,27 +24,23 @@ SCALE.md §6r).  The rank-QUANTIZED variant below
 quantizes keys to equi-depth range ranks first so the curve always
 runs over a dense bounded grid at ANY domain — the SF-1000 shape.
 
-Layout tables are session-memoized stage tables (invariant 9): keyed on
-applicationId + fixture fingerprint, LRU-bounded, directory rmtree'd on
-eviction.
+Layout tables are session-memoized stage tables (CLAUDE.md invariant
+9) whose directories are rmtree'd on eviction.
 """
 
 from __future__ import annotations
 
-import os
-from collections import OrderedDict
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..memo import evict_lru_dirs, scratch_dir, table_fingerprint
+from ..memo import Owned, SessionMemo, scratch_dir
 from ..sources import load_table
 
 Z_BITS = 20
 Z_FILES = 16
 
-_LAYOUT_MEMO: OrderedDict = OrderedDict()
-_LAYOUT_MEMO_MAX = 4
+# One memo for the z-order, Hilbert and quantized layouts.
+_LAYOUT_MEMO = SessionMemo(4)
 
 
 def zvalue_sql(xcol: str, ycol: str, bits: int = Z_BITS) -> str:
@@ -73,31 +69,24 @@ def zorder_layout_table(spark: SparkSession, sf_dir: str) -> str:
     pushdown prunes in both dimensions.  At 100 TB this is a one-off
     layout job (one range shuffle, the same price as any global sort)
     amortized over every box query that follows."""
-    key = (
-        spark.sparkContext.applicationId,
-        os.path.abspath(sf_dir),
-        table_fingerprint(sf_dir, "lineitem"),
-    )
-    hit = _LAYOUT_MEMO.get(key)
-    if hit is not None and os.path.isdir(hit[0]):
-        _LAYOUT_MEMO.move_to_end(key)
-        return hit[0]
-    li = load_table(spark, sf_dir, "lineitem").select(
-        "l_partkey",
-        "l_suppkey",
-        F.round(F.col("l_extendedprice") * 100).cast("bigint").alias("cents"),
-        F.expr(zvalue_sql("l_partkey", "l_suppkey")).cast("bigint").alias("z"),
-    )
-    out = scratch_dir("zorder_layout_")
-    (
-        li.repartitionByRange(Z_FILES, "z")
-        .sortWithinPartitions("z")
-        .write.mode("overwrite")
-        .parquet(out)
-    )
-    _LAYOUT_MEMO[key] = (out,)
-    evict_lru_dirs(_LAYOUT_MEMO, _LAYOUT_MEMO_MAX)
-    return out
+
+    def build() -> Owned:
+        li = load_table(spark, sf_dir, "lineitem").select(
+            "l_partkey",
+            "l_suppkey",
+            F.round(F.col("l_extendedprice") * 100).cast("bigint").alias("cents"),
+            F.expr(zvalue_sql("l_partkey", "l_suppkey")).cast("bigint").alias("z"),
+        )
+        out = scratch_dir("zorder_layout_")
+        (
+            li.repartitionByRange(Z_FILES, "z")
+            .sortWithinPartitions("z")
+            .write.mode("overwrite")
+            .parquet(out)
+        )
+        return Owned(out, dirs=(out,))
+
+    return _LAYOUT_MEMO.get(spark, sf_dir, ("lineitem",), build)
 
 
 # The registered 2-D box: fixed constants valid at every fixture SF
@@ -196,66 +185,58 @@ def hilbert_layout_table(spark: SparkSession, sf_dir: str) -> str:
     (Morton takes long diagonal jumps at power-of-two boundaries), so
     row-group bounding boxes are tighter on average — measured against
     z-order in tests/test_scale_techniques.py and SCALE.md §6o."""
-    key = (
-        "hilbert",
-        spark.sparkContext.applicationId,
-        os.path.abspath(sf_dir),
-        table_fingerprint(sf_dir, "lineitem"),
-    )
-    hit = _LAYOUT_MEMO.get(key)
-    if hit is not None and os.path.isdir(hit[0]):
-        _LAYOUT_MEMO.move_to_end(key)
-        return hit[0]
-    src = load_table(spark, sf_dir, "lineitem").select(
-        "l_partkey",
-        "l_suppkey",
-        F.round(F.col("l_extendedprice") * 100).cast("bigint").alias("cents"),
-    )
 
-    # The BUILD path computes the index with Arrow-batched numpy: the
-    # 16-level Catalyst chain is the ORACLE mirror (and stays pinned
-    # equal to this in tests), but as generated code it exceeds the
-    # huge-method limit and falls back to interpreted projection —
-    # measured 8 µs/row vs ~0.1 µs/row vectorized (sf0.1 layout build
-    # 11.8s -> ~2s).  Same recurrence, exact int64 ops, bit-identical.
-    bits = Z_BITS
+    def build() -> Owned:
+        src = load_table(spark, sf_dir, "lineitem").select(
+            "l_partkey",
+            "l_suppkey",
+            F.round(F.col("l_extendedprice") * 100).cast("bigint").alias("cents"),
+        )
 
-    def add_h(batches):
-        import numpy as np
+        # The BUILD path computes the index with Arrow-batched numpy: the
+        # 16-level Catalyst chain is the ORACLE mirror (and stays pinned
+        # equal to this in tests), but as generated code it exceeds the
+        # huge-method limit and falls back to interpreted projection —
+        # measured 8 µs/row vs ~0.1 µs/row vectorized (sf0.1 layout build
+        # 11.8s -> ~2s).  Same recurrence, exact int64 ops, bit-identical.
+        bits = Z_BITS
 
-        for pdf in batches:
-            hx = pdf["l_partkey"].to_numpy(np.int64) & ((1 << bits) - 1)
-            hy = pdf["l_suppkey"].to_numpy(np.int64) & ((1 << bits) - 1)
-            d = np.zeros_like(hx)
-            for lvl in range(bits):
-                s = 1 << (bits - 1 - lvl)
-                rx = ((hx & s) > 0).astype(np.int64)
-                ry = ((hy & s) > 0).astype(np.int64)
-                d += s * s * np.where(
-                    (rx == 1) & (ry == 1),
-                    2,
-                    np.where(rx == 1, 3, np.where(ry == 1, 1, 0)),
-                )
-                nx = np.where(ry == 0, np.where(rx == 1, s - 1 - hy, hy), hx)
-                ny = np.where(ry == 0, np.where(rx == 1, s - 1 - hx, hx), hy)
-                hx, hy = nx, ny
-            out_pdf = pdf.copy()
-            out_pdf["h"] = d
-            yield out_pdf
+        def add_h(batches):
+            import numpy as np
 
-    li = src.mapInPandas(
-        add_h, "l_partkey long, l_suppkey long, cents long, h long"
-    ).localCheckpoint(eager=False)
-    out = scratch_dir("hilbert_layout_")
-    (
-        li.repartitionByRange(Z_FILES, "h")
-        .sortWithinPartitions("h")
-        .write.mode("overwrite")
-        .parquet(out)
-    )
-    _LAYOUT_MEMO[key] = (out,)
-    evict_lru_dirs(_LAYOUT_MEMO, _LAYOUT_MEMO_MAX)
-    return out
+            for pdf in batches:
+                hx = pdf["l_partkey"].to_numpy(np.int64) & ((1 << bits) - 1)
+                hy = pdf["l_suppkey"].to_numpy(np.int64) & ((1 << bits) - 1)
+                d = np.zeros_like(hx)
+                for lvl in range(bits):
+                    s = 1 << (bits - 1 - lvl)
+                    rx = ((hx & s) > 0).astype(np.int64)
+                    ry = ((hy & s) > 0).astype(np.int64)
+                    d += s * s * np.where(
+                        (rx == 1) & (ry == 1),
+                        2,
+                        np.where(rx == 1, 3, np.where(ry == 1, 1, 0)),
+                    )
+                    nx = np.where(ry == 0, np.where(rx == 1, s - 1 - hy, hy), hx)
+                    ny = np.where(ry == 0, np.where(rx == 1, s - 1 - hx, hx), hy)
+                    hx, hy = nx, ny
+                out_pdf = pdf.copy()
+                out_pdf["h"] = d
+                yield out_pdf
+
+        li = src.mapInPandas(
+            add_h, "l_partkey long, l_suppkey long, cents long, h long"
+        ).localCheckpoint(eager=False)
+        out = scratch_dir("hilbert_layout_")
+        (
+            li.repartitionByRange(Z_FILES, "h")
+            .sortWithinPartitions("h")
+            .write.mode("overwrite")
+            .parquet(out)
+        )
+        return Owned(out, dirs=(out,))
+
+    return _LAYOUT_MEMO.get(spark, sf_dir, ("lineitem",), build, "hilbert")
 
 
 def hilbert_box_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -349,53 +330,45 @@ def quantized_layout_table(spark: SparkSession, sf_dir: str) -> str:
     Quantization is monotone, so row groups sorted by qz are tight
     boxes in the ORIGINAL keys too — the box query's min/max stats
     pruning works unchanged."""
-    key = (
-        "quantized",
-        spark.sparkContext.applicationId,
-        os.path.abspath(sf_dir),
-        table_fingerprint(sf_dir, "lineitem"),
-    )
-    hit = _LAYOUT_MEMO.get(key)
-    if hit is not None and os.path.isdir(hit[0]):
-        _LAYOUT_MEMO.move_to_end(key)
-        return hit[0]
-    li = load_table(spark, sf_dir, "lineitem").select(
-        "l_partkey",
-        "l_suppkey",
-        F.round(F.col("l_extendedprice") * 100).cast("bigint").alias("cents"),
-    )
-    mx = _rank_map(
-        li.groupBy(F.col("l_partkey").alias("k")).agg(
-            F.count(F.lit(1)).alias("cnt")
-        ),
-        QBUCKETS,
-    ).select(F.col("k").alias("pk"), F.col("q").alias("qx"))
-    my = _rank_map(
-        li.groupBy(F.col("l_suppkey").alias("k")).agg(
-            F.count(F.lit(1)).alias("cnt")
-        ),
-        QBUCKETS,
-    ).select(F.col("k").alias("sk"), F.col("q").alias("qy"))
-    lay = (
-        li.join(mx, li.l_partkey == mx.pk)
-        .join(F.broadcast(my), li.l_suppkey == my.sk)
-        .select(
+
+    def build() -> Owned:
+        li = load_table(spark, sf_dir, "lineitem").select(
             "l_partkey",
             "l_suppkey",
-            "cents",
-            F.expr(zvalue_sql("qx", "qy", QBITS)).cast("bigint").alias("qz"),
+            F.round(F.col("l_extendedprice") * 100).cast("bigint").alias("cents"),
         )
-    )
-    out = scratch_dir("quantized_layout_")
-    (
-        lay.repartitionByRange(Z_FILES, "qz")
-        .sortWithinPartitions("qz")
-        .write.mode("overwrite")
-        .parquet(out)
-    )
-    _LAYOUT_MEMO[key] = (out,)
-    evict_lru_dirs(_LAYOUT_MEMO, _LAYOUT_MEMO_MAX)
-    return out
+        mx = _rank_map(
+            li.groupBy(F.col("l_partkey").alias("k")).agg(
+                F.count(F.lit(1)).alias("cnt")
+            ),
+            QBUCKETS,
+        ).select(F.col("k").alias("pk"), F.col("q").alias("qx"))
+        my = _rank_map(
+            li.groupBy(F.col("l_suppkey").alias("k")).agg(
+                F.count(F.lit(1)).alias("cnt")
+            ),
+            QBUCKETS,
+        ).select(F.col("k").alias("sk"), F.col("q").alias("qy"))
+        lay = (
+            li.join(mx, li.l_partkey == mx.pk)
+            .join(F.broadcast(my), li.l_suppkey == my.sk)
+            .select(
+                "l_partkey",
+                "l_suppkey",
+                "cents",
+                F.expr(zvalue_sql("qx", "qy", QBITS)).cast("bigint").alias("qz"),
+            )
+        )
+        out = scratch_dir("quantized_layout_")
+        (
+            lay.repartitionByRange(Z_FILES, "qz")
+            .sortWithinPartitions("qz")
+            .write.mode("overwrite")
+            .parquet(out)
+        )
+        return Owned(out, dirs=(out,))
+
+    return _LAYOUT_MEMO.get(spark, sf_dir, ("lineitem",), build, "quantized")
 
 
 def quantized_box_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -18,14 +18,12 @@ Scale notes per operator are in the docstrings; the common discipline:
 
 from __future__ import annotations
 
-from collections import OrderedDict
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..functions import cents, decimal_sum, disc_price_sum, money_avg, money_sum
-from ..memo import scratch_dir
+from ..memo import Owned, SessionMemo, scratch_dir
 from ..sources import load_table, register_views
 
 
@@ -1878,6 +1876,23 @@ def bloom_filter_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     would move the full fact table.  A pytest pins bloom-passed counts
     strictly between the true match count and the table count.
     """
+    _o, keys, passed = _bloom_probe(spark, sf_dir)
+    return (
+        passed.select("o_custkey", "o_orderstatus", "o_totalprice")
+        # exact semi join kills the Bloom's false positives
+        .join(F.broadcast(keys), F.col("o_custkey") == F.col("c_custkey"), "semi")
+        .groupBy("o_orderstatus")
+        .agg(
+            F.count(F.lit(1)).alias("n_orders"),
+            money_sum("o_totalprice").alias("revenue"),
+        )
+        .orderBy("o_orderstatus")
+    )
+
+
+def _bloom_probe(spark: SparkSession, sf_dir: str):
+    """(orders, qualifying customer keys, the orders whose keys pass the
+    Bloom bitmap) for :func:`bloom_filter_join`."""
     c = load_table(spark, sf_dir, "customer")
     o = load_table(spark, sf_dir, "orders")
     keys = c.filter(
@@ -1924,66 +1939,7 @@ def bloom_filter_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         "(shiftright(__w0, cast(__p0 % 64 as int)) & 1) = 1 "
         "AND (shiftright(__w1, cast(__p1 % 64 as int)) & 1) = 1"
     )
-    return (
-        probed.where(bloom_pass)
-        .select("o_custkey", "o_orderstatus", "o_totalprice")
-        # exact semi join kills the Bloom's false positives
-        .join(F.broadcast(keys), F.col("o_custkey") == F.col("c_custkey"), "semi")
-        .groupBy("o_orderstatus")
-        .agg(
-            F.count(F.lit(1)).alias("n_orders"),
-            money_sum("o_totalprice").alias("revenue"),
-        )
-        .orderBy("o_orderstatus")
-    )
-
-
-def bloom_prefilter_counts(spark: SparkSession, sf_dir: str):
-    """Diagnostic companion to :func:`bloom_filter_join` used by the
-    pytest pin: returns (total_orders, bloom_passed, true_matches)."""
-    c = load_table(spark, sf_dir, "customer")
-    o = load_table(spark, sf_dir, "orders")
-    keys = c.filter(
-        (F.col("c_mktsegment") == "BUILDING") & (F.col("c_nationkey") < 10)
-    ).select("c_custkey")
-    total = o.count()
-    true_matches = o.join(
-        F.broadcast(keys), F.col("o_custkey") == F.col("c_custkey"), "semi"
-    ).count()
-    # reuse the registered query's bitmap by re-deriving it
-    prows = (
-        keys.select(
-            F.explode(
-                F.array(
-                    *[
-                        F.pmod(F.xxhash64(F.col("c_custkey"), F.lit(s)), F.lit(_BLOOM_BITS))
-                        for s in (1, 2)
-                    ]
-                )
-            ).alias("p")
-        )
-        .distinct()
-        .collect()
-    )
-    words = [0] * _BLOOM_WORDS
-    for r in prows:
-        p = int(r["p"])
-        words[p // 64] |= 1 << (p % 64)
-    words = [w - (1 << 64) if w >= (1 << 63) else w for w in words]
-    bmdf = spark.createDataFrame([(words,)], "bm array<bigint>")
-    probed = o.join(F.broadcast(bmdf))
-    for i, seed in enumerate((1, 2)):
-        pcol = F.pmod(F.xxhash64(F.col("o_custkey"), F.lit(seed)), F.lit(_BLOOM_BITS))
-        probed = probed.withColumn(f"__p{i}", pcol).withColumn(
-            f"__w{i}", F.element_at(F.col("bm"), (F.col(f"__p{i}") / 64).cast("int") + 1)
-        )
-    bloom_passed = probed.where(
-        F.expr(
-            "(shiftright(__w0, cast(__p0 % 64 as int)) & 1) = 1 "
-            "AND (shiftright(__w1, cast(__p1 % 64 as int)) & 1) = 1"
-        )
-    ).count()
-    return total, bloom_passed, true_matches
+    return o, keys, probed.where(bloom_pass)
 
 
 def k_anonymity_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4255,23 +4211,10 @@ def sql_udf_revenue_tiers(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Bucketed warehouse stage tables for the co-located join demo — keyed on
-# (applicationId, fixture fingerprint) per CLAUDE.md invariant 9, LRU
-# bounded.  At 100 TB these are the bucketed fact tables a warehouse
-# maintains precisely so recurring joins on the bucket key never shuffle.
-_BUCKET_MEMO: OrderedDict = OrderedDict()
-_BUCKET_MEMO_MAX = 4
-
-
-def _table_fingerprint(sf_dir: str, name: str):
-    """(mtime_ns, size) change-detector for a fixture table file/dir —
-    never reads data.  Delegates to the shared memo.table_fingerprint
-    (round-11 migration; VERDICT_r10 item 3 + ADVICE_r10 item 2: one
-    fingerprint recipe repo-wide — this also moves _schema_evolution_dir
-    off the old max-of-entries recipe)."""
-    from ..memo import table_fingerprint
-
-    return table_fingerprint(sf_dir, name)
+# Bucketed warehouse stage tables for the co-located join demo.  At
+# 100 TB these are the bucketed fact tables a warehouse maintains
+# precisely so recurring joins on the bucket key never shuffle.
+_BUCKET_MEMO = SessionMemo(4)
 
 
 def _bucketed_order_tables(spark: SparkSession, sf_dir: str):
@@ -4281,65 +4224,42 @@ def _bucketed_order_tables(spark: SparkSession, sf_dir: str):
     task exactly one bucket, so the bucketed scan needs no merge-sort
     across files).  External tables (explicit temp path) — nothing is
     written relative to the driver's unknown cwd."""
-    import hashlib
     import os
+    import uuid
 
-    key = (
-        spark.sparkContext.applicationId,
-        os.path.abspath(sf_dir),
-        _table_fingerprint(sf_dir, "orders"),
-        _table_fingerprint(sf_dir, "lineitem"),
-    )
-    hit = _BUCKET_MEMO.get(key)
-    if hit is not None:
-        _BUCKET_MEMO.move_to_end(key)
-        return hit[:2]
-    suffix = hashlib.md5(repr(key).encode()).hexdigest()[:10]
-    names = (f"mps_bkt_orders_{suffix}", f"mps_bkt_lineitem_{suffix}")
-    root = scratch_dir("mps_bucketed_")
-    o = (
-        load_table(spark, sf_dir, "orders")
-        .select("o_orderkey", "o_orderpriority")
-        .repartition(8, "o_orderkey")
-    )
-    (
-        o.write.format("parquet")
-        .bucketBy(8, "o_orderkey")
-        .sortBy("o_orderkey")
-        .option("path", os.path.join(root, "orders"))
-        .mode("overwrite")
-        .saveAsTable(names[0])
-    )
-    li = (
-        load_table(spark, sf_dir, "lineitem")
-        .select("l_orderkey", "l_extendedprice", "l_discount")
-        .repartition(8, "l_orderkey")
-    )
-    (
-        li.write.format("parquet")
-        .bucketBy(8, "l_orderkey")
-        .sortBy("l_orderkey")
-        .option("path", os.path.join(root, "lineitem"))
-        .mode("overwrite")
-        .saveAsTable(names[1])
-    )
-    _BUCKET_MEMO[key] = (names[0], names[1], root)
-    # Mirror _STANDING_IDX_MEMO's teardown (streaming/windows.py): an
-    # evicted bucketed warehouse must drop its catalog entries and
-    # delete its temp root, or fixture regeneration in a long session
-    # leaks tables and disk.
-    def _drop_bucketed(val, spark=spark):
-        import shutil
+    def build() -> Owned:
+        suffix = uuid.uuid4().hex[:10]
+        names = (f"mps_bkt_orders_{suffix}", f"mps_bkt_lineitem_{suffix}")
+        root = scratch_dir("mps_bucketed_")
+        o = (
+            load_table(spark, sf_dir, "orders")
+            .select("o_orderkey", "o_orderpriority")
+            .repartition(8, "o_orderkey")
+        )
+        (
+            o.write.format("parquet")
+            .bucketBy(8, "o_orderkey")
+            .sortBy("o_orderkey")
+            .option("path", os.path.join(root, "orders"))
+            .mode("overwrite")
+            .saveAsTable(names[0])
+        )
+        li = (
+            load_table(spark, sf_dir, "lineitem")
+            .select("l_orderkey", "l_extendedprice", "l_discount")
+            .repartition(8, "l_orderkey")
+        )
+        (
+            li.write.format("parquet")
+            .bucketBy(8, "l_orderkey")
+            .sortBy("l_orderkey")
+            .option("path", os.path.join(root, "lineitem"))
+            .mode("overwrite")
+            .saveAsTable(names[1])
+        )
+        return Owned(names, dirs=(root,), tables=names)
 
-        old_o, old_l, old_root = val
-        for tbl in (old_o, old_l):
-            spark.sql(f"DROP TABLE IF EXISTS {tbl}")
-        shutil.rmtree(old_root, ignore_errors=True)
-
-    from ..memo import evict_lru
-
-    evict_lru(_BUCKET_MEMO, _BUCKET_MEMO_MAX, teardown=_drop_bucketed)
-    return names
+    return _BUCKET_MEMO.get(spark, sf_dir, ("orders", "lineitem"), build)
 
 
 def bucketed_colocated_join(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4373,8 +4293,7 @@ def bucketed_colocated_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_PART_ORDERS_MEMO: OrderedDict = OrderedDict()
-_PART_ORDERS_MEMO_MAX = 4
+_PART_ORDERS_MEMO = SessionMemo(4)
 
 
 def _partitioned_orders_path(spark: SparkSession, sf_dir: str) -> str:
@@ -4382,39 +4301,22 @@ def _partitioned_orders_path(spark: SparkSession, sf_dir: str) -> str:
     parquet layout (o_month=YYYY-MM directories, ~80 partitions, one
     file each via the pre-write repartition) — the physical layout that
     makes partition pruning (static and dynamic) possible.  External
-    temp path; memoized per invariant 9 with rmtree on evict."""
+    temp path."""
     import os
-    import shutil
 
-    key = (
-        spark.sparkContext.applicationId,
-        os.path.abspath(sf_dir),
-        _table_fingerprint(sf_dir, "orders"),
-    )
-    hit = _PART_ORDERS_MEMO.get(key)
-    if hit is not None and os.path.isdir(hit):
-        _PART_ORDERS_MEMO.move_to_end(key)
-        return hit
-    root = os.path.join(scratch_dir("mps_part_orders_"), "orders")
-    (
-        load_table(spark, sf_dir, "orders")
-        .withColumn("o_month", F.date_format("o_orderdate", "yyyy-MM"))
-        .repartition("o_month")
-        .write.partitionBy("o_month")
-        .mode("overwrite")
-        .parquet(root)
-    )
-    _PART_ORDERS_MEMO[key] = root
-    from ..memo import evict_lru
+    def build() -> Owned:
+        root = os.path.join(scratch_dir("mps_part_orders_"), "orders")
+        (
+            load_table(spark, sf_dir, "orders")
+            .withColumn("o_month", F.date_format("o_orderdate", "yyyy-MM"))
+            .repartition("o_month")
+            .write.partitionBy("o_month")
+            .mode("overwrite")
+            .parquet(root)
+        )
+        return Owned(root, dirs=(os.path.dirname(root),))
 
-    evict_lru(
-        _PART_ORDERS_MEMO,
-        _PART_ORDERS_MEMO_MAX,
-        teardown=lambda r: shutil.rmtree(
-            os.path.dirname(r), ignore_errors=True
-        ),
-    )
-    return root
+    return _PART_ORDERS_MEMO.get(spark, sf_dir, ("orders",), build)
 
 
 def dpp_monthly_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4781,8 +4683,7 @@ def group_by_all_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_MERGE_SCHEMA_MEMO: OrderedDict = OrderedDict()
-_MERGE_SCHEMA_MEMO_MAX = 4
+_MERGE_SCHEMA_MEMO = SessionMemo(4)
 
 
 def _schema_evolution_dir(spark: SparkSession, sf_dir: str) -> str:
@@ -4790,36 +4691,25 @@ def _schema_evolution_dir(spark: SparkSession, sf_dir: str) -> str:
     generation v1 (odd order keys) has columns (o_orderkey, cents);
     generation v2 (even keys) adds o_orderpriority — the lake layout
     every long-lived dataset grows into as writers evolve.  Memoized
-    per (session, fixture), LRU-evicted with rmtree (invariant 9)."""
+    per (session, fixture)."""
     import os
-    import shutil
 
-    key = (
-        spark.sparkContext.applicationId,
-        os.path.abspath(sf_dir),
-        _table_fingerprint(sf_dir, "orders"),
-    )
-    hit = _MERGE_SCHEMA_MEMO.get(key)
-    if hit is not None and os.path.isdir(hit[0]):
-        _MERGE_SCHEMA_MEMO.move_to_end(key)
-        return hit[0]
-    o = load_table(spark, sf_dir, "orders").select(
-        "o_orderkey",
-        F.round(F.col("o_totalprice") * 100).cast("bigint").alias("cents"),
-        "o_orderpriority",
-    )
-    root = scratch_dir("schema_evo_")
-    o.where(F.col("o_orderkey") % 2 == 1).drop("o_orderpriority").coalesce(
-        2
-    ).write.parquet(os.path.join(root, "gen=v1"))
-    o.where(F.col("o_orderkey") % 2 == 0).coalesce(2).write.parquet(
-        os.path.join(root, "gen=v2")
-    )
-    _MERGE_SCHEMA_MEMO[key] = (root,)
-    from ..memo import evict_lru_dirs
+    def build() -> Owned:
+        o = load_table(spark, sf_dir, "orders").select(
+            "o_orderkey",
+            F.round(F.col("o_totalprice") * 100).cast("bigint").alias("cents"),
+            "o_orderpriority",
+        )
+        root = scratch_dir("schema_evo_")
+        o.where(F.col("o_orderkey") % 2 == 1).drop("o_orderpriority").coalesce(
+            2
+        ).write.parquet(os.path.join(root, "gen=v1"))
+        o.where(F.col("o_orderkey") % 2 == 0).coalesce(2).write.parquet(
+            os.path.join(root, "gen=v2")
+        )
+        return Owned(root, dirs=(root,))
 
-    evict_lru_dirs(_MERGE_SCHEMA_MEMO, _MERGE_SCHEMA_MEMO_MAX)
-    return root
+    return _MERGE_SCHEMA_MEMO.get(spark, sf_dir, ("orders",), build)
 
 
 def merge_schema_evolution_read(spark: SparkSession, sf_dir: str) -> DataFrame:

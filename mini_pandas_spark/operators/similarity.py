@@ -21,7 +21,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..functions import cosine, dot, sq_norm
-from ..memo import evict_lru
+from ..memo import SessionMemo
 from ..sources import load_table
 
 N_QUERIES = 10
@@ -261,22 +261,13 @@ def embedding_near_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     is standalone, but semdedup_pipeline + this query + their pytest pins
     each re-ran the quantizer-assign-verify chain without it.
     """
-    key = (
-        "emb_pairs",
-        spark.sparkContext.applicationId,
-        sf_dir,
-        _embeddings_fingerprint(sf_dir),
-    )
-    hit = _EMB_PAIRS_MEMO.get(key)
-    if hit is not None:
-        _EMB_PAIRS_MEMO.move_to_end(key)
-        return hit
-    out = _near_dup_pairs_impl(
-        spark, sf_dir, NEAR_DUP_TAU, DEDUP_CELLS, DEDUP_PROBES, None
-    ).localCheckpoint(eager=False)
-    _EMB_PAIRS_MEMO[key] = out
-    evict_lru(_EMB_PAIRS_MEMO, _EMB_PAIRS_MEMO_MAX)
-    return out
+
+    def build() -> DataFrame:
+        return _near_dup_pairs_impl(
+            spark, sf_dir, NEAR_DUP_TAU, DEDUP_CELLS, DEDUP_PROBES, None
+        ).localCheckpoint(eager=False)
+
+    return _EMB_PAIRS_MEMO.get(spark, sf_dir, ("embeddings",), build)
 
 
 def _near_dup_pairs_impl(
@@ -328,44 +319,19 @@ N_PROBE = 4
 LLOYD_ITERS = 1
 
 
-# Trained-quantizer memo, keyed by (sf_dir, data fingerprint, k, iters,
-# sample_mod).  Training is fully deterministic (init = lowest vec_ids,
-# partials combined in sorted cid order, partition-invariant by pytest
-# pin), so every embedding query in a session — ivf_ann_topk,
+# Trained-quantizer memo, keyed by (k, iters, sample_mod) over the
+# embeddings fixture.  Training is fully deterministic (init = lowest
+# vec_ids, partials combined in sorted cid order, partition-invariant by
+# pytest pin), so every embedding query — ivf_ann_topk,
 # embedding_near_dup_pairs, the bench loop — can share ONE cell layout
 # instead of re-running the Lloyd pass per query.  At 100 TB this is the
 # "train once on a sample, reuse the index layout" contract of a real IVF
-# build.  Driver-side state only (plain floats); nothing ships to
-# executors.  The fingerprint (mtime_ns + size of the embeddings parquet)
-# invalidates the memo when tooling rewrites a fixture in-process, and
-# the OrderedDict is LRU-bounded so many stress-harness corpora can't
-# grow it without bound.
-from collections import OrderedDict
+# build.  Driver-side state only (plain floats), so no session owns it.
+_QUANTIZER_MEMO = SessionMemo(8)
 
-_QUANTIZER_MEMO: OrderedDict = OrderedDict()
-_QUANTIZER_MEMO_MAX = 8
-
-# Verified embedding near-dup pair frame memo (the dedup._SKETCH_MEMO
-# recipe): keyed on (applicationId, fixture fingerprint) so a new session
-# or regenerated fixture never sees a stale frame; LRU-bounded.
-# LOCAL-MODE ASSUMPTION (ADVICE r6 #3): entries hold lazily
-# localCheckpointed frames whose lineage is truncated — on a multi-
-# executor cluster an executor loss invalidates checkpoint blocks and a
-# later memo hit would fail with "checkpoint block not found" without
-# self-healing.  Fine on local[N] (blocks live in the one JVM for the
-# session's lifetime); a production port persists these stage tables to
-# parquet (the streaming standing-index tables show that shape).
-_EMB_PAIRS_MEMO: OrderedDict = OrderedDict()
-_EMB_PAIRS_MEMO_MAX = 4
-
-
-def _embeddings_fingerprint(sf_dir: str):
-    """Cheap change-detector for the embeddings fixture under sf_dir —
-    never reads data.  Delegates to the shared memo.table_fingerprint
-    (round-11 migration; VERDICT_r10 item 3)."""
-    from ..memo import table_fingerprint
-
-    return table_fingerprint(sf_dir, "embeddings")
+# Verified embedding near-dup pair frames (localCheckpointed; see the
+# local-mode note on dedup._SKETCH_MEMO).
+_EMB_PAIRS_MEMO = SessionMemo(4)
 
 
 SAMPLE_MOD = 4  # 1-in-4 deterministic training sample (vec_id % 4 == 0)
@@ -477,19 +443,16 @@ def _trained_quantizer(
     exact pytest pin); ``sample_mod=m`` trains driver-locally on the
     deterministic 1-in-m sample (the 100 TB recipe; used by
     ivf_ann_topk, whose contract is a recall floor, not exactness)."""
-    key = (sf_dir, _embeddings_fingerprint(sf_dir), k, iters, sample_mod)
-    hit = _QUANTIZER_MEMO.get(key)
-    if hit is not None:
-        _QUANTIZER_MEMO.move_to_end(key)
-        return hit
-    if sample_mod is None:
-        out = _lloyd_distributed(vec, k, iters)
-    else:
+
+    def build():
+        if sample_mod is None:
+            return _lloyd_distributed(vec, k, iters)
         sample = vec.filter(_sample_predicate(k)).select("vec_id", "v").collect()
-        out = _lloyd_local(sample, k, iters)
-    _QUANTIZER_MEMO[key] = out
-    evict_lru(_QUANTIZER_MEMO, _QUANTIZER_MEMO_MAX)
-    return out
+        return _lloyd_local(sample, k, iters)
+
+    return _QUANTIZER_MEMO.get(
+        None, sf_dir, ("embeddings",), build, k, iters, sample_mod
+    )
 
 
 def _assign_topp_np(vec: DataFrame, cids: list, cn: list, n_probe: int) -> DataFrame:
@@ -581,19 +544,12 @@ def ivf_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (vec_id < k) and the query vectors (vec_id < N_QUERIES): they are
     # filters on the same cached frame, and folding them halves the
     # cold-path plan-compilation jobs this algorithm pays before Lloyd.
-    # On a quantizer-memo hit (cell layout already trained this session)
-    # only the query rows are fetched and the Lloyd pass is skipped.
-    key = (
-        sf_dir,
-        _embeddings_fingerprint(sf_dir),
-        N_CENTROIDS,
-        LLOYD_ITERS,
-        SAMPLE_MOD,
-    )
-    cached = _QUANTIZER_MEMO.get(key)
-    if cached is not None:
-        _QUANTIZER_MEMO.move_to_end(key)
-    if cached is None:
+    # On a quantizer-memo hit (cell layout already trained) only the
+    # query rows are fetched and the Lloyd pass is skipped.
+    qrows = None
+
+    def build():
+        nonlocal qrows
         head = (
             vec.filter(_sample_predicate(max(N_CENTROIDS, N_QUERIES)))
             .select("vec_id", "v", "nrm")
@@ -601,11 +557,12 @@ def ivf_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         head.sort(key=lambda r: r["vec_id"])
         qrows = [r for r in head if r["vec_id"] < N_QUERIES]
-        cids, cn = _lloyd_local(head, N_CENTROIDS, LLOYD_ITERS)
-        _QUANTIZER_MEMO[key] = (cids, cn)
-        evict_lru(_QUANTIZER_MEMO, _QUANTIZER_MEMO_MAX)
-    else:
-        cids, cn = cached
+        return _lloyd_local(head, N_CENTROIDS, LLOYD_ITERS)
+
+    cids, cn = _QUANTIZER_MEMO.get(
+        None, sf_dir, ("embeddings",), build, N_CENTROIDS, LLOYD_ITERS, SAMPLE_MOD
+    )
+    if qrows is None:
         qrows = sorted(
             vec.filter(F.col("vec_id") < N_QUERIES)
             .select("vec_id", "v", "nrm")

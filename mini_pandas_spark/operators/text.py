@@ -20,7 +20,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions import round_scaled, token_count, tokens
-from ..memo import evict_lru
+from ..memo import SessionMemo
 from ..sources import load_table
 
 # Tiny deterministic stopword lists for the language-ID heuristic.
@@ -29,42 +29,15 @@ EN_STOP = ("the", "a", "of", "and", "to", "in")
 ES_STOP = ("el", "la", "de", "y", "en", "que")
 FR_STOP = ("le", "la", "de", "et", "un", "une")
 
-# Session-scoped LM score-frame memo (the _SKETCH_MEMO recipe,
-# operators/dedup.py): FOUR registered queries rebuild the unigram
-# scoring pipeline (unigram_logprob_docs, perplexity_band_filter,
-# dsir_importance_weights, rho_loss_selection) and TWO rebuild the
-# bigram one (bigram_logprob_docs, rho_loss_selection) — each rebuild
-# re-explodes the corpus and re-counts term/bigram frequencies.  At
-# 100 TB these per-doc score frames are the stage tables a curation
-# pipeline persists once and joins many times.  Keyed on
-# (applicationId, sf_dir, fixture fingerprint) per invariant 9 so a new
-# session or a regenerated fixture can never see a stale frame;
-# LRU-bounded.  Local-mode note (ADVICE r6 #3): entries hold lazily
-# localCheckpointed frames whose lineage is truncated — on a real
-# cluster an executor loss invalidates checkpoint blocks, so a
-# production port would persist to a parquet stage table instead.
-from collections import OrderedDict
-
-_LM_MEMO: OrderedDict = OrderedDict()
-_LM_MEMO_MAX = 8  # 2 entry kinds x up to 3 sf fixtures + slack
-
-
-def _lm_memo_get(kind: str, spark: SparkSession, sf_dir: str):
-    from .dedup import _documents_fingerprint
-
-    key = (kind, spark.sparkContext.applicationId, sf_dir,
-           _documents_fingerprint(sf_dir))
-    hit = _LM_MEMO.get(key)
-    if hit is not None:
-        _LM_MEMO.move_to_end(key)
-    return key, hit
-
-
-def _lm_memo_put(key, frame: DataFrame) -> DataFrame:
-    out = frame.localCheckpoint(eager=False)
-    _LM_MEMO[key] = out
-    evict_lru(_LM_MEMO, _LM_MEMO_MAX)
-    return out
+# Session-scoped LM score-frame memo: FOUR registered queries rebuild
+# the unigram scoring pipeline (unigram_logprob_docs,
+# perplexity_band_filter, dsir_importance_weights, rho_loss_selection)
+# and TWO rebuild the bigram one (bigram_logprob_docs,
+# rho_loss_selection) — each rebuild re-explodes the corpus and
+# re-counts term/bigram frequencies.  At 100 TB these per-doc score
+# frames are the stage tables a curation pipeline persists once and
+# joins many times.
+_LM_MEMO = SessionMemo(8)  # 2 entry kinds x up to 3 sf fixtures + slack
 
 
 def token_count_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -566,35 +539,36 @@ def unigram_logprob_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     Rounded to 6 decimals (+0.0) after the final division so float
     summation order cannot leak into the oracle hash.
 
-    The per-doc score frame is memoized per (session, fixture) — see
+    The per-doc score frame is memoized per (session, fixture) in
     ``_LM_MEMO``: four registered queries consume this pipeline.
     """
-    key, hit = _lm_memo_get("unigram", spark, sf_dir)
-    if hit is not None:
-        return hit
-    d = load_table(spark, sf_dir, "documents")
-    # tok checkpointed (two consumers); the corpus total derives from the
-    # term counts (Σcnt == token count exactly) — the tokenize/explode
-    # pass ran three times before (tf, tc, tot each re-derived it)
-    tok = d.select(
-        "doc_id", F.explode(tokens("text")).alias("term")
-    ).localCheckpoint(eager=False)
-    tf = tok.groupBy("doc_id", "term").agg(F.count(F.lit(1)).alias("tf"))
-    tc = tok.groupBy("term").agg(F.count(F.lit(1)).alias("cnt"))
-    tot = tc.agg(F.sum("cnt").alias("total"))
-    logp = F.log(F.col("cnt").cast("double") / F.col("total"))
-    out = (
-        tf.join(tc, "term")
-        .crossJoin(F.broadcast(tot))
-        .groupBy("doc_id")
-        .agg(
-            F.sum("tf").alias("n_tokens"),
-            (
-                F.round(F.sum(F.col("tf") * logp) / F.sum("tf"), 6) + 0.0
-            ).alias("avg_logprob"),
+
+    def build() -> DataFrame:
+        d = load_table(spark, sf_dir, "documents")
+        # tok checkpointed (two consumers); the corpus total derives from the
+        # term counts (Σcnt == token count exactly) — the tokenize/explode
+        # pass ran three times before (tf, tc, tot each re-derived it)
+        tok = d.select(
+            "doc_id", F.explode(tokens("text")).alias("term")
+        ).localCheckpoint(eager=False)
+        tf = tok.groupBy("doc_id", "term").agg(F.count(F.lit(1)).alias("tf"))
+        tc = tok.groupBy("term").agg(F.count(F.lit(1)).alias("cnt"))
+        tot = tc.agg(F.sum("cnt").alias("total"))
+        logp = F.log(F.col("cnt").cast("double") / F.col("total"))
+        out = (
+            tf.join(tc, "term")
+            .crossJoin(F.broadcast(tot))
+            .groupBy("doc_id")
+            .agg(
+                F.sum("tf").alias("n_tokens"),
+                (
+                    F.round(F.sum(F.col("tf") * logp) / F.sum("tf"), 6) + 0.0
+                ).alias("avg_logprob"),
+            )
         )
-    )
-    return _lm_memo_put(key, out)
+        return out.localCheckpoint(eager=False)
+
+    return _LM_MEMO.get(spark, sf_dir, ("documents",), build, "unigram")
 
 
 def cleaning_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -833,50 +807,51 @@ def bigram_logprob_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast vocabulary scalar, and the per-doc rollup — the same
     shapes as the unigram scorer plus the lag window.
 
-    The per-doc score frame is memoized per (session, fixture) — see
+    The per-doc score frame is memoized per (session, fixture) in
     ``_LM_MEMO``: ``rho_loss_selection`` also consumes this pipeline.
     """
-    key, hit = _lm_memo_get("bigram", spark, sf_dir)
-    if hit is not None:
-        return hit.orderBy("doc_id")
     from pyspark.sql.window import Window
 
-    d = load_table(spark, sf_dir, "documents")
-    # both checkpointed: tok feeds the bigram window AND the vocabulary
-    # count; bg feeds THREE consumers (both count marginals + the score
-    # join) — without the barriers the tokenize/posexplode pass ran
-    # three times and the lag window twice (round-11 job audit)
-    tok = d.select(
-        "doc_id", F.posexplode(tokens("text")).alias("pos", "term")
-    ).localCheckpoint(eager=False)
-    w = Window.partitionBy("doc_id").orderBy("pos")
-    bg = (
-        tok.select(
-            "doc_id",
-            F.lag("term").over(w).alias("w1"),
-            F.col("term").alias("w2"),
+    def build() -> DataFrame:
+        d = load_table(spark, sf_dir, "documents")
+        # both checkpointed: tok feeds the bigram window AND the vocabulary
+        # count; bg feeds THREE consumers (both count marginals + the score
+        # join) — without the barriers the tokenize/posexplode pass ran
+        # three times and the lag window twice (round-11 job audit)
+        tok = d.select(
+            "doc_id", F.posexplode(tokens("text")).alias("pos", "term")
+        ).localCheckpoint(eager=False)
+        w = Window.partitionBy("doc_id").orderBy("pos")
+        bg = (
+            tok.select(
+                "doc_id",
+                F.lag("term").over(w).alias("w1"),
+                F.col("term").alias("w2"),
+            )
+            .where(F.col("w1").isNotNull())
+            .localCheckpoint(eager=False)
         )
-        .where(F.col("w1").isNotNull())
-        .localCheckpoint(eager=False)
-    )
-    c12 = bg.groupBy("w1", "w2").agg(F.count(F.lit(1)).alias("c12"))
-    c1 = bg.groupBy("w1").agg(F.count(F.lit(1)).alias("c1"))
-    vocab = tok.agg(F.countDistinct("term").alias("v_sz"))
-    logp = F.log(
-        (F.col("c12") + F.lit(1)).cast("double")
-        / (F.col("c1") + F.col("v_sz")).cast("double")
-    )
-    scored = (
-        bg.join(c12, ["w1", "w2"])
-        .join(c1, "w1")
-        .crossJoin(F.broadcast(vocab))
-        .groupBy("doc_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_bigrams"),
-            (F.round(F.avg(logp), 6) + F.lit(0.0)).alias("avg_bigram_logprob"),
+        c12 = bg.groupBy("w1", "w2").agg(F.count(F.lit(1)).alias("c12"))
+        c1 = bg.groupBy("w1").agg(F.count(F.lit(1)).alias("c1"))
+        vocab = tok.agg(F.countDistinct("term").alias("v_sz"))
+        logp = F.log(
+            (F.col("c12") + F.lit(1)).cast("double")
+            / (F.col("c1") + F.col("v_sz")).cast("double")
         )
-    )
-    return _lm_memo_put(key, scored).orderBy("doc_id")
+        scored = (
+            bg.join(c12, ["w1", "w2"])
+            .join(c1, "w1")
+            .crossJoin(F.broadcast(vocab))
+            .groupBy("doc_id")
+            .agg(
+                F.count(F.lit(1)).alias("n_bigrams"),
+                (F.round(F.avg(logp), 6) + F.lit(0.0)).alias("avg_bigram_logprob"),
+            )
+        )
+        return scored.localCheckpoint(eager=False)
+
+    scored = _LM_MEMO.get(spark, sf_dir, ("documents",), build, "bigram")
+    return scored.orderBy("doc_id")
 
 
 def corpus_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:

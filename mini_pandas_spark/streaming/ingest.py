@@ -18,9 +18,8 @@ per-type totals from the SINK — which therefore equals a plain GROUP BY
 over the whole fixture, the DuckDB oracle.
 
 Artifacts are memoized per (session, fixture) like every stage table
-(CLAUDE.md invariant 9); memo values are TUPLES of dirs so the shared
-eviction loop rmtrees sink + checkpoint + staged source together
-(invariant 10).
+(CLAUDE.md invariant 9); the memo entry owns sink, checkpoint and
+staged source, so eviction rmtrees them together.
 """
 
 from __future__ import annotations
@@ -28,95 +27,82 @@ from __future__ import annotations
 import glob as _glob
 import os
 import shutil
-from collections import OrderedDict
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..memo import evict_lru_dirs, scratch_dir
+from ..memo import Owned, SessionMemo, scratch_dir
 from ..sources.tables import ensure_runtime_confs
-from .windows import (
-    BOUNDED_KEY_PARTITIONS,
-    _events_fingerprint,
-    _drain_confs,
-)
+from .windows import BOUNDED_KEY_PARTITIONS, _drain_confs
 
-_INGEST_MEMO: OrderedDict = OrderedDict()
-_INGEST_MEMO_MAX = 4
+_INGEST_MEMO = SessionMemo(4)
 
 
 def _ingest_artifacts(spark: SparkSession, sf_dir: str):
     """Stage the landing dir, run the two-drain ingest, return
     (sink_dir, checkpoint_dir, src_dir)."""
     ensure_runtime_confs(spark)
-    key = (
-        spark.sparkContext.applicationId,
-        os.path.abspath(sf_dir),
-        _events_fingerprint(sf_dir),
-    )
-    hit = _INGEST_MEMO.get(key)
-    if hit is not None and os.path.isdir(hit[0]):
-        _INGEST_MEMO.move_to_end(key)
-        return hit
-    src_file = os.path.join(sf_dir, "events.parquet")
-    raw = spark.read.parquet(src_file)
-    src = scratch_dir("ingest_src_")
-    sink = scratch_dir("ingest_sink_")
-    ck = scratch_dir("ingest_ck_")
 
-    def stage_third(mod: int, order: int) -> None:
-        stage = os.path.join(src, "_stage")
-        (
-            raw.where(F.col("event_id") % 3 == mod)
-            .coalesce(1)
-            .write.parquet(stage)
-        )
-        (part,) = _glob.glob(os.path.join(stage, "part-*.parquet"))
-        dest = os.path.join(src, f"arrival_{order:02d}.parquet")
-        shutil.copy(part, dest)
-        shutil.rmtree(stage)
-        os.utime(dest, (order, 100 + order))  # mtime order = arrival order
+    def build() -> Owned:
+        src_file = os.path.join(sf_dir, "events.parquet")
+        raw = spark.read.parquet(src_file)
+        src = scratch_dir("ingest_src_")
+        sink = scratch_dir("ingest_sink_")
+        ck = scratch_dir("ingest_ck_")
 
-    def write_batch(bdf, batch_id: int) -> None:
-        # idempotent per-batch sink: overwrite-by-batchId makes a
-        # replayed batch (failure between commit points) harmless
-        (
-            bdf.groupBy("event_type")
-            .agg(
-                F.count(F.lit(1)).alias("n"),
-                F.sum(
-                    F.round(F.col("value") * 100).cast("bigint")
-                ).alias("cents"),
+        def stage_third(mod: int, order: int) -> None:
+            stage = os.path.join(src, "_stage")
+            (
+                raw.where(F.col("event_id") % 3 == mod)
+                .coalesce(1)
+                .write.parquet(stage)
             )
-            .write.mode("overwrite")
-            .parquet(os.path.join(sink, f"batch_id={batch_id}"))
-        )
+            (part,) = _glob.glob(os.path.join(stage, "part-*.parquet"))
+            dest = os.path.join(src, f"arrival_{order:02d}.parquet")
+            shutil.copy(part, dest)
+            shutil.rmtree(stage)
+            os.utime(dest, (order, 100 + order))  # mtime order = arrival order
 
-    def drain() -> None:
-        stream = (
-            spark.readStream.schema(raw.schema)
-            .format("parquet")
-            .option("pathGlobFilter", "*.parquet")
-            .load(src)
-        )
-        with _drain_confs(spark, partitions=BOUNDED_KEY_PARTITIONS):
-            q = (
-                stream.writeStream.foreachBatch(write_batch)
-                .option("checkpointLocation", ck)
-                .trigger(availableNow=True)
-                .start()
+        def write_batch(bdf, batch_id: int) -> None:
+            # idempotent per-batch sink: overwrite-by-batchId makes a
+            # replayed batch (failure between commit points) harmless
+            (
+                bdf.groupBy("event_type")
+                .agg(
+                    F.count(F.lit(1)).alias("n"),
+                    F.sum(
+                        F.round(F.col("value") * 100).cast("bigint")
+                    ).alias("cents"),
+                )
+                .write.mode("overwrite")
+                .parquet(os.path.join(sink, f"batch_id={batch_id}"))
             )
-            q.awaitTermination()
 
-    stage_third(0, 0)
-    stage_third(1, 1)
-    drain()  # batch 0: arrivals 0-1
-    stage_third(2, 2)
-    drain()  # batch 1: ONLY the new arrival — the restart-resume receipt
-    out = (sink, ck, src)
-    _INGEST_MEMO[key] = out
-    evict_lru_dirs(_INGEST_MEMO, _INGEST_MEMO_MAX)
-    return out
+        def drain() -> None:
+            stream = (
+                spark.readStream.schema(raw.schema)
+                .format("parquet")
+                .option("pathGlobFilter", "*.parquet")
+                .load(src)
+            )
+            with _drain_confs(spark, partitions=BOUNDED_KEY_PARTITIONS):
+                q = (
+                    stream.writeStream.foreachBatch(write_batch)
+                    .option("checkpointLocation", ck)
+                    .trigger(availableNow=True)
+                    .start()
+                )
+                q.awaitTermination()
+
+        stage_third(0, 0)
+        stage_third(1, 1)
+        drain()  # batch 0: arrivals 0-1
+        stage_third(2, 2)
+        drain()  # batch 1: ONLY the new arrival — the restart-resume receipt
+        out = (sink, ck, src)
+        return Owned(out, dirs=out)
+
+    return _INGEST_MEMO.get(spark, sf_dir, ("events",), build)
 
 
 def incremental_ingest_totals(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -37,8 +37,7 @@ from __future__ import annotations
 import os
 import shutil
 
-from ..memo import scratch_dir
-from collections import OrderedDict
+from ..memo import Owned, SessionMemo, scratch_dir
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -47,19 +46,16 @@ from ..sources.tables import ensure_runtime_confs
 from .windows import (
     BOUNDED_KEY_PARTITIONS,
     _drain_to_memory,
-    _events_fingerprint,
     _source_schema,
     read_events_stream,
 )
 
 _FMT = "yyyy-MM-dd HH:mm:ss"
 
-# Checkpoint memo: one drain per (session, fixture) — the checkpoint is
-# per-fixture infrastructure like the standing index; LRU eviction
-# removes the on-disk checkpoint too (stale-dir hygiene, the
-# _BUCKET_MEMO precedent).
-_STATE_CKPT_MEMO: OrderedDict = OrderedDict()
-_STATE_CKPT_MEMO_MAX = 6
+# Checkpoint memo shared by the three state-checkpoint builders: one
+# drain per (session, fixture) — the checkpoint is per-fixture
+# infrastructure like the standing index.
+_STATE_CKPT_MEMO = SessionMemo(6)
 
 
 def _user_totals_state_checkpoint(spark: SparkSession, sf_dir: str) -> str:
@@ -67,39 +63,24 @@ def _user_totals_state_checkpoint(spark: SparkSession, sf_dir: str) -> str:
     returning the checkpoint dir whose state store now holds the final
     per-user aggregation buffers."""
     ensure_runtime_confs(spark)
-    key = (
-        spark.sparkContext.applicationId,
-        os.path.abspath(sf_dir),
-        _events_fingerprint(sf_dir),
-    )
-    hit = _STATE_CKPT_MEMO.get(key)
-    if hit is not None and os.path.isdir(hit[0]):
-        _STATE_CKPT_MEMO.move_to_end(key)
-        return hit[0]
-    ev = read_events_stream(spark, sf_dir)
-    agg = ev.groupBy("user_id").agg(
-        # round to cents BEFORE summing: the state buffer itself is then
-        # an exact bigint, and the state-source read needs no float work
-        F.sum(F.round(F.col("value") * 100).cast("bigint")).alias("cents"),
-        F.count(F.lit(1)).alias("n"),
-        F.max("ts").alias("last"),
-    )
-    ck = scratch_dir("state_ckpt_")
-    # the drained rows are not the product: the checkpoint's state is
-    _drain_to_memory(
-        spark, agg, "update", checkpoint=ck, partitions=BOUNDED_KEY_PARTITIONS
-    )
-    # memo values are always TUPLES of dirs (first = checkpoint) so the
-    # shared eviction loop can rmtree every associated dir
-    _STATE_CKPT_MEMO[key] = (ck,)
-    _evict_state_memo()
-    return ck
 
+    def build() -> Owned:
+        ev = read_events_stream(spark, sf_dir)
+        agg = ev.groupBy("user_id").agg(
+            # round to cents BEFORE summing: the state buffer itself is then
+            # an exact bigint, and the state-source read needs no float work
+            F.sum(F.round(F.col("value") * 100).cast("bigint")).alias("cents"),
+            F.count(F.lit(1)).alias("n"),
+            F.max("ts").alias("last"),
+        )
+        ck = scratch_dir("state_ckpt_")
+        # the drained rows are not the product: the checkpoint's state is
+        _drain_to_memory(
+            spark, agg, "update", checkpoint=ck, partitions=BOUNDED_KEY_PARTITIONS
+        )
+        return Owned(ck, dirs=(ck,))
 
-def _evict_state_memo() -> None:
-    from ..memo import evict_lru_dirs
-
-    evict_lru_dirs(_STATE_CKPT_MEMO, _STATE_CKPT_MEMO_MAX)
+    return _STATE_CKPT_MEMO.get(spark, sf_dir, ("events",), build)
 
 
 def build_standing_state_checkpoints(spark: SparkSession, sf_dir: str) -> None:
@@ -191,50 +172,42 @@ def _evolution_checkpoint(spark: SparkSession, sf_dir: str) -> str:
     import glob as _glob
 
     ensure_runtime_confs(spark)
-    key = (
-        "evolution",
-        spark.sparkContext.applicationId,
-        os.path.abspath(sf_dir),
-        _events_fingerprint(sf_dir),
-    )
-    hit = _STATE_CKPT_MEMO.get(key)
-    if hit is not None and os.path.isdir(hit[0]):
-        _STATE_CKPT_MEMO.move_to_end(key)
-        return hit[0]
-    src = os.path.join(sf_dir, "events.parquet")
-    raw = spark.read.parquet(src)
-    root = scratch_dir("state_evo_src_")
-    for i, parity in enumerate((0, 1)):
-        stage = os.path.join(root, "_stage")
-        (
-            raw.where(F.col("event_id") % 2 == parity)
-            .coalesce(1)
-            .write.parquet(stage)
+
+    def build() -> Owned:
+        src = os.path.join(sf_dir, "events.parquet")
+        raw = spark.read.parquet(src)
+        root = scratch_dir("state_evo_src_")
+        for i, parity in enumerate((0, 1)):
+            stage = os.path.join(root, "_stage")
+            (
+                raw.where(F.col("event_id") % 2 == parity)
+                .coalesce(1)
+                .write.parquet(stage)
+            )
+            (part,) = _glob.glob(os.path.join(stage, "part-*.parquet"))
+            dest = os.path.join(root, f"half_{i}.parquet")
+            shutil.copy(part, dest)
+            shutil.rmtree(stage)
+            os.utime(dest, (i, 100 + i))  # mtime order fixes batch order
+        agg = (
+            spark.readStream.schema(raw.schema)
+            .format("parquet")
+            .option("pathGlobFilter", "*.parquet")
+            .option("maxFilesPerTrigger", "1")
+            .load(root)
+            .groupBy("user_id")
+            .agg(
+                F.sum(F.round(F.col("value") * 100).cast("bigint")).alias("cents"),
+                F.count(F.lit(1)).alias("n"),
+            )
         )
-        (part,) = _glob.glob(os.path.join(stage, "part-*.parquet"))
-        dest = os.path.join(root, f"half_{i}.parquet")
-        shutil.copy(part, dest)
-        shutil.rmtree(stage)
-        os.utime(dest, (i, 100 + i))  # mtime order fixes batch order
-    agg = (
-        spark.readStream.schema(raw.schema)
-        .format("parquet")
-        .option("pathGlobFilter", "*.parquet")
-        .option("maxFilesPerTrigger", "1")
-        .load(root)
-        .groupBy("user_id")
-        .agg(
-            F.sum(F.round(F.col("value") * 100).cast("bigint")).alias("cents"),
-            F.count(F.lit(1)).alias("n"),
+        ck = scratch_dir("state_evo_ck_")
+        _drain_to_memory(
+            spark, agg, "update", checkpoint=ck, partitions=BOUNDED_KEY_PARTITIONS
         )
-    )
-    ck = scratch_dir("state_evo_ck_")
-    _drain_to_memory(
-        spark, agg, "update", checkpoint=ck, partitions=BOUNDED_KEY_PARTITIONS
-    )
-    _STATE_CKPT_MEMO[key] = (ck, root)
-    _evict_state_memo()
-    return ck
+        return Owned(ck, dirs=(ck, root))
+
+    return _STATE_CKPT_MEMO.get(spark, sf_dir, ("events",), build, "evolution")
 
 
 def _outer_join_state_checkpoint(spark: SparkSession, sf_dir: str) -> str:
@@ -242,80 +215,72 @@ def _outer_join_state_checkpoint(spark: SparkSession, sf_dir: str) -> str:
     join (the streaming_outer_join_attribution topology) once with an
     EXPLICIT checkpoint, so its join state is readable afterwards.
     Memoized per (session, fixture); reuses the memoized
-    sentinel-augmented events dir (owned by _SENTINEL_DIRS — only the
-    checkpoint goes in this memo's eviction tuple)."""
+    sentinel-augmented events dir (owned by _SENTINEL_DIRS — this
+    memo's entry owns only the checkpoint)."""
     from .windows import (
         OUTER_JOIN_STATE_PARTITIONS,
         _events_dir_with_sentinels,
     )
 
     ensure_runtime_confs(spark)
-    key = (
-        "joinstate",
-        spark.sparkContext.applicationId,
-        os.path.abspath(sf_dir),
-        _events_fingerprint(sf_dir),
-    )
-    hit = _STATE_CKPT_MEMO.get(key)
-    if hit is not None and os.path.isdir(hit[0]):
-        _STATE_CKPT_MEMO.move_to_end(key)
-        return hit[0]
-    root = _events_dir_with_sentinels(spark, sf_dir)
-    schema = _source_schema(spark, os.path.join(sf_dir, "events.parquet"))
-    raw = (
-        spark.readStream.schema(schema)
-        .format("parquet")
-        .option("pathGlobFilter", "*.parquet")
-        .load(root)
-    )
-    ts_type = schema["ts"].dataType.simpleString()
-    ts = (
-        F.timestamp_micros(F.expr("ts div 1000"))
-        if ts_type == "bigint"
-        else F.col("ts").cast("timestamp")
-    )
-    ev = raw.withColumn("ts", ts)
-    purchases = (
-        ev.filter(F.col("event_type") == "purchase")
-        .select(
-            F.col("event_id").alias("purchase_id"),
-            F.col("user_id").alias("p_user"),
-            F.col("ts").alias("p_ts"),
+
+    def build() -> Owned:
+        root = _events_dir_with_sentinels(spark, sf_dir)
+        schema = _source_schema(spark, os.path.join(sf_dir, "events.parquet"))
+        raw = (
+            spark.readStream.schema(schema)
+            .format("parquet")
+            .option("pathGlobFilter", "*.parquet")
+            .load(root)
         )
-        .withWatermark("p_ts", "1 hour")
-    )
-    errors = (
-        ev.filter(F.col("event_type") == "error")
-        .select(
-            F.col("event_id").alias("error_id"),
-            F.col("user_id").alias("e_user"),
-            F.col("ts").alias("e_ts"),
+        ts_type = schema["ts"].dataType.simpleString()
+        ts = (
+            F.timestamp_micros(F.expr("ts div 1000"))
+            if ts_type == "bigint"
+            else F.col("ts").cast("timestamp")
         )
-        .withWatermark("e_ts", "1 hour")
-    )
-    joined = purchases.join(
-        errors,
-        F.expr(
-            "p_user = e_user AND e_ts >= p_ts "
-            "AND e_ts <= p_ts + INTERVAL '30' MINUTE"
-        ),
-        "leftOuter",
-    ).select(
-        "purchase_id",
-        F.col("p_user").alias("user_id"),
-        F.coalesce(F.col("error_id"), F.lit(-1)).cast("long").alias("error_id"),
-    )
-    ck = scratch_dir("join_state_ck_")
-    _drain_to_memory(
-        spark,
-        joined,
-        "append",
-        checkpoint=ck,
-        partitions=OUTER_JOIN_STATE_PARTITIONS,
-    )
-    _STATE_CKPT_MEMO[key] = (ck,)
-    _evict_state_memo()
-    return ck
+        ev = raw.withColumn("ts", ts)
+        purchases = (
+            ev.filter(F.col("event_type") == "purchase")
+            .select(
+                F.col("event_id").alias("purchase_id"),
+                F.col("user_id").alias("p_user"),
+                F.col("ts").alias("p_ts"),
+            )
+            .withWatermark("p_ts", "1 hour")
+        )
+        errors = (
+            ev.filter(F.col("event_type") == "error")
+            .select(
+                F.col("event_id").alias("error_id"),
+                F.col("user_id").alias("e_user"),
+                F.col("ts").alias("e_ts"),
+            )
+            .withWatermark("e_ts", "1 hour")
+        )
+        joined = purchases.join(
+            errors,
+            F.expr(
+                "p_user = e_user AND e_ts >= p_ts "
+                "AND e_ts <= p_ts + INTERVAL '30' MINUTE"
+            ),
+            "leftOuter",
+        ).select(
+            "purchase_id",
+            F.col("p_user").alias("user_id"),
+            F.coalesce(F.col("error_id"), F.lit(-1)).cast("long").alias("error_id"),
+        )
+        ck = scratch_dir("join_state_ck_")
+        _drain_to_memory(
+            spark,
+            joined,
+            "append",
+            checkpoint=ck,
+            partitions=OUTER_JOIN_STATE_PARTITIONS,
+        )
+        return Owned(ck, dirs=(ck,))
+
+    return _STATE_CKPT_MEMO.get(spark, sf_dir, ("events",), build, "joinstate")
 
 
 def join_state_buffered_sides(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -26,14 +26,13 @@ import os
 import threading
 import uuid
 import weakref
-from collections import OrderedDict
 from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions import decimal_sum
-from ..memo import evict_lru, scratch_dir, table_fingerprint
+from ..memo import Owned, SessionMemo, scratch_dir
 from ..session import ensure_runtime_confs
 
 _FMT = "yyyy-MM-dd HH:mm:ss"
@@ -224,10 +223,9 @@ def _drain_to_memory(
 # Footer-read schema memo for streaming sources: every drain needs an
 # explicit schema, previously via a fresh batch read (driver footer
 # read, ~50-150 ms) per call — ~18 call sites across the family pay it
-# once per billed row.  Keyed on (path, mtime_ns+size fingerprint) per
-# invariant 9; schemas are session-independent, so no applicationId.
-_SOURCE_SCHEMA_MEMO: OrderedDict = OrderedDict()
-_SOURCE_SCHEMA_MEMO_MAX = 16
+# once per billed row.  Schemas are session-independent, so the key
+# carries no applicationId.
+_SOURCE_SCHEMA_MEMO = SessionMemo(16)
 
 
 def _source_schema(spark: SparkSession, path: str):
@@ -236,18 +234,10 @@ def _source_schema(spark: SparkSession, path: str):
     A path that cannot be fingerprinted (stat failed, or no ``.parquet``
     name) is read every time: no key could notice it being rewritten."""
     sf_dir, name = os.path.split(os.path.abspath(path))
-    fp = table_fingerprint(sf_dir, name.removesuffix(".parquet"))
-    if fp is None:
-        return spark.read.parquet(path).schema
-    key = (os.path.abspath(path), fp)
-    hit = _SOURCE_SCHEMA_MEMO.get(key)
-    if hit is not None:
-        _SOURCE_SCHEMA_MEMO.move_to_end(key)
-        return hit
-    schema = spark.read.parquet(path).schema
-    _SOURCE_SCHEMA_MEMO[key] = schema
-    evict_lru(_SOURCE_SCHEMA_MEMO, _SOURCE_SCHEMA_MEMO_MAX)
-    return schema
+    name = name.removesuffix(".parquet")
+    return _SOURCE_SCHEMA_MEMO.get(
+        None, sf_dir, (name,), lambda: spark.read.parquet(path).schema, name
+    )
 
 
 def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1025,72 +1015,51 @@ def _standing_index_tables(spark: SparkSession, sf_dir: str):
     never broadcast and never re-shuffled; only the (tiny) arriving
     micro-batch moves.  Written once per (session, fixture) under a
     temp dir (same precedent as the manifest sink) and registered in
-    the session catalog; LRU-evicted with DROP TABLE + rmtree.
+    the session catalog.
     """
-    import shutil
-
     from ..operators.dedup import (
-        _documents_fingerprint,
         _is_new_doc,
         _minhash_bands,
         _minhash_sketch_table,
     )
 
-    key = (
-        "standing_idx",
-        spark.sparkContext.applicationId,
-        sf_dir,
-        _documents_fingerprint(sf_dir),
-    )
-    hit = _STANDING_IDX_MEMO.get(key)
-    if hit is not None:
-        _STANDING_IDX_MEMO.move_to_end(key)
-        return hit[0], hit[1]
-    corpus = _minhash_sketch_table(spark, sf_dir).where(
-        ~_is_new_doc(F.col("doc_id"))
-    )
-    tag = uuid.uuid4().hex[:8]
-    root = scratch_dir("standing_idx_")
-    bands_tbl, sets_tbl = f"neardup_bands_{tag}", f"neardup_sets_{tag}"
-    (
-        _minhash_bands(corpus)
-        .select(F.col("doc_id").alias("doc_old"), "band", "sig")
-        .write.bucketBy(BOUNDED_KEY_PARTITIONS, "band", "sig")
-        .sortBy("band", "sig")
-        .option("path", os.path.join(root, bands_tbl))
-        .saveAsTable(bands_tbl)
-    )
-    (
-        corpus.select(
-            F.col("doc_id").alias("doc_old"),
-            F.col("hashes").alias("ho"),
-            F.col("sz").alias("sz_o"),
+    def build() -> Owned:
+        corpus = _minhash_sketch_table(spark, sf_dir).where(
+            ~_is_new_doc(F.col("doc_id"))
         )
-        .write.bucketBy(BOUNDED_KEY_PARTITIONS, "doc_old")
-        .sortBy("doc_old")
-        .option("path", os.path.join(root, sets_tbl))
-        .saveAsTable(sets_tbl)
+        tag = uuid.uuid4().hex[:8]
+        root = scratch_dir("standing_idx_")
+        bands_tbl, sets_tbl = f"neardup_bands_{tag}", f"neardup_sets_{tag}"
+        (
+            _minhash_bands(corpus)
+            .select(F.col("doc_id").alias("doc_old"), "band", "sig")
+            .write.bucketBy(BOUNDED_KEY_PARTITIONS, "band", "sig")
+            .sortBy("band", "sig")
+            .option("path", os.path.join(root, bands_tbl))
+            .saveAsTable(bands_tbl)
+        )
+        (
+            corpus.select(
+                F.col("doc_id").alias("doc_old"),
+                F.col("hashes").alias("ho"),
+                F.col("sz").alias("sz_o"),
+            )
+            .write.bucketBy(BOUNDED_KEY_PARTITIONS, "doc_old")
+            .sortBy("doc_old")
+            .option("path", os.path.join(root, sets_tbl))
+            .saveAsTable(sets_tbl)
+        )
+        tables = (bands_tbl, sets_tbl)
+        return Owned(tables, dirs=(root,), tables=tables)
+
+    return _STANDING_IDX_MEMO.get(
+        spark, sf_dir, ("documents",), build, "standing_idx"
     )
-    _STANDING_IDX_MEMO[key] = (bands_tbl, sets_tbl, root)
-
-    def _drop_idx(val, spark=spark):
-        old_b, old_s, old_root = val
-        for tbl in (old_b, old_s):
-            spark.sql(f"DROP TABLE IF EXISTS {tbl}")
-        shutil.rmtree(old_root, ignore_errors=True)
-
-    evict_lru(_STANDING_IDX_MEMO, _STANDING_IDX_MEMO_MAX, teardown=_drop_idx)
-    return bands_tbl, sets_tbl
 
 
-_STANDING_IDX_MEMO: OrderedDict = OrderedDict()
-_STANDING_IDX_MEMO_MAX = 4
-
-# sentinel-augmented events dirs for the outer-join drain, keyed on
-# (appId, sf_dir, fixture fingerprint) — invariant 9 (stale fixture =
-# stale sentinels), LRU-bounded with rmtree on evict
-_SENTINEL_DIRS: OrderedDict = OrderedDict()
-_SENTINEL_DIRS_MAX = 4
+_STANDING_IDX_MEMO = SessionMemo(4)
+# sentinel-augmented events dirs for the outer-join drains
+_SENTINEL_DIRS = SessionMemo(4)
 
 
 def streaming_neardup_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1325,15 +1294,6 @@ def streaming_epoch_log_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _events_fingerprint(sf_dir: str):
-    """(mtime_ns, size) change-detector for the events fixture — never
-    reads data.  Delegates to the shared memo.table_fingerprint
-    (round-11 migration; VERDICT_r10 item 3)."""
-    from ..memo import table_fingerprint
-
-    return table_fingerprint(sf_dir, "events")
-
-
 def _events_dir_with_sentinels(spark: SparkSession, sf_dir: str) -> str:
     """Temp directory holding the events fixture file PLUS two staggered
     far-future sentinel files (each one 'error' + one 'purchase' row,
@@ -1357,70 +1317,59 @@ def _events_dir_with_sentinels(spark: SparkSession, sf_dir: str) -> str:
     import shutil
 
     ensure_runtime_confs(spark)
-    key = (
-        spark.sparkContext.applicationId,
-        os.path.abspath(sf_dir),
-        _events_fingerprint(sf_dir),
-    )
-    hit = _SENTINEL_DIRS.get(key)
-    if hit is not None and os.path.isdir(hit):
-        _SENTINEL_DIRS.move_to_end(key)
-        return hit
-    src = os.path.join(sf_dir, "events.parquet")
-    raw = spark.read.parquet(src)
-    ts_type = raw.schema["ts"].dataType.simpleString()
-    root = scratch_dir("events_sentinel_")
-    # The stream reads `root` NON-recursively (pathGlobFilter *.parquet),
-    # so a directory-layout fixture (the layout _events_fingerprint
-    # already supports) must be FLATTENED into root — one copy per part
-    # file, listdir-sorted order preserved through ascending mtimes, all
-    # strictly before the sentinels' 10_000_000_000+ band.
-    if os.path.isdir(src):
-        parts = sorted(
-            f for f in os.listdir(src) if f.endswith(".parquet")
-        )
-        for j, name in enumerate(parts):
-            dest = os.path.join(root, f"events_{j:05d}.parquet")
-            shutil.copy(os.path.join(src, name), dest)
-            os.utime(dest, (0, 9_000_000_000 + j))
-    else:
-        shutil.copy(src, os.path.join(root, "events.parquet"))
-    last = raw.orderBy(F.col("ts").desc()).limit(1)
-    for i, days in enumerate((1, 2)):
-        shift = (
-            (F.col("ts") + F.lit(days * 86400 * 10**9))
-            if ts_type == "bigint"
-            else F.col("ts") + F.expr(f"INTERVAL {days} DAY")
-        )
-        sent = last.select(
-            F.lit(-1).cast("bigint").alias("event_id"),
-            shift.alias("ts"),
-            F.lit(-1).cast("bigint").alias("user_id"),
-            F.explode(F.array(F.lit("error"), F.lit("purchase"))).alias(
-                "event_type"
-            ),
-            F.lit(0.0).alias("value"),
-            F.lit("{}").alias("props"),
-        ).select(raw.columns)
-        stage = os.path.join(root, "_stage")
-        sent.coalesce(1).write.parquet(stage)
-        (part,) = _glob.glob(os.path.join(stage, "part-*.parquet"))
-        dest = os.path.join(root, f"zz_sentinel_{i}.parquet")
-        shutil.copy(part, dest)
-        shutil.rmtree(stage)
-        # file-stream source orders by modification time: fixture first,
-        # then sentinel 0, then sentinel 1
-        os.utime(dest, (1 + i, 10_000_000_000 + i))
-    single = os.path.join(root, "events.parquet")
-    if os.path.exists(single):
-        os.utime(single, (0, 9_999_999_999))
-    _SENTINEL_DIRS[key] = root
-    evict_lru(
-        _SENTINEL_DIRS,
-        _SENTINEL_DIRS_MAX,
-        teardown=lambda d: shutil.rmtree(d, ignore_errors=True),
-    )
-    return root
+
+    def build() -> Owned:
+        src = os.path.join(sf_dir, "events.parquet")
+        raw = spark.read.parquet(src)
+        ts_type = raw.schema["ts"].dataType.simpleString()
+        root = scratch_dir("events_sentinel_")
+        # The stream reads `root` NON-recursively (pathGlobFilter *.parquet),
+        # so a directory-layout fixture (the layout table_fingerprint
+        # already supports) must be FLATTENED into root — one copy per part
+        # file, listdir-sorted order preserved through ascending mtimes, all
+        # strictly before the sentinels' 10_000_000_000+ band.
+        if os.path.isdir(src):
+            parts = sorted(
+                f for f in os.listdir(src) if f.endswith(".parquet")
+            )
+            for j, name in enumerate(parts):
+                dest = os.path.join(root, f"events_{j:05d}.parquet")
+                shutil.copy(os.path.join(src, name), dest)
+                os.utime(dest, (0, 9_000_000_000 + j))
+        else:
+            shutil.copy(src, os.path.join(root, "events.parquet"))
+        last = raw.orderBy(F.col("ts").desc()).limit(1)
+        for i, days in enumerate((1, 2)):
+            shift = (
+                (F.col("ts") + F.lit(days * 86400 * 10**9))
+                if ts_type == "bigint"
+                else F.col("ts") + F.expr(f"INTERVAL {days} DAY")
+            )
+            sent = last.select(
+                F.lit(-1).cast("bigint").alias("event_id"),
+                shift.alias("ts"),
+                F.lit(-1).cast("bigint").alias("user_id"),
+                F.explode(F.array(F.lit("error"), F.lit("purchase"))).alias(
+                    "event_type"
+                ),
+                F.lit(0.0).alias("value"),
+                F.lit("{}").alias("props"),
+            ).select(raw.columns)
+            stage = os.path.join(root, "_stage")
+            sent.coalesce(1).write.parquet(stage)
+            (part,) = _glob.glob(os.path.join(stage, "part-*.parquet"))
+            dest = os.path.join(root, f"zz_sentinel_{i}.parquet")
+            shutil.copy(part, dest)
+            shutil.rmtree(stage)
+            # file-stream source orders by modification time: fixture first,
+            # then sentinel 0, then sentinel 1
+            os.utime(dest, (1 + i, 10_000_000_000 + i))
+        single = os.path.join(root, "events.parquet")
+        if os.path.exists(single):
+            os.utime(single, (0, 9_999_999_999))
+        return Owned(root, dirs=(root,))
+
+    return _SENTINEL_DIRS.get(spark, sf_dir, ("events",), build)
 
 
 def streaming_outer_join_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1683,11 +1632,9 @@ def dynamic_gap_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("user_id", "session_start")
 
 
-# Streaming table-sink memo: (table_name, checkpoint, table_path) per
-# (session, fixture); eviction drops the catalog entry and both dirs
-# (the _BUCKET_MEMO teardown recipe).
-_TABLE_SINK_MEMO: "OrderedDict" = OrderedDict()
-_TABLE_SINK_MEMO_MAX = 4
+# Streaming table-sink memo: the sink table per (session, fixture); the
+# entry owns the catalog table and its root (checkpoint + table path).
+_TABLE_SINK_MEMO = SessionMemo(4)
 
 
 def streaming_table_sink_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1713,15 +1660,8 @@ def streaming_table_sink_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     BY: closed + open days partition the data by day).
     """
     ensure_runtime_confs(spark)
-    import shutil
 
-    key = (
-        spark.sparkContext.applicationId,
-        os.path.abspath(sf_dir),
-        _events_fingerprint(sf_dir),
-    )
-    hit = _TABLE_SINK_MEMO.get(key)
-    if hit is None:
+    def build() -> Owned:
         ev = read_events_stream(spark, sf_dir)
         cents = F.round(F.col("value") * 100).cast("bigint")
         agg = (
@@ -1753,17 +1693,9 @@ def streaming_table_sink_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .toTable(tbl)
             )
             q.awaitTermination()
-        _TABLE_SINK_MEMO[key] = (tbl, root)
+        return Owned(tbl, dirs=(root,), tables=(tbl,))
 
-        def _drop_sink(val, spark=spark):
-            old_tbl, old_root = val
-            spark.sql(f"DROP TABLE IF EXISTS {old_tbl}")
-            shutil.rmtree(old_root, ignore_errors=True)
-
-        evict_lru(_TABLE_SINK_MEMO, _TABLE_SINK_MEMO_MAX, teardown=_drop_sink)
-    else:
-        _TABLE_SINK_MEMO.move_to_end(key)
-    tbl, _root = _TABLE_SINK_MEMO[key]
+    tbl = _TABLE_SINK_MEMO.get(spark, sf_dir, ("events",), build)
     closed = spark.table(tbl)
     # open-day guard: days the watermark never closed come from a batch
     # aggregate over the same source (production reads them from the

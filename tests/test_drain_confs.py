@@ -13,7 +13,7 @@ and the streaming source-schema memo.
 - a warm drain forks no ``readlink`` and few processes overall (without
   libhadoop, Spark's default FileContext checkpoint manager forks a
   ``readlink`` per checkpoint rename);
-- ``_SOURCE_SCHEMA_MEMO`` is LRU and never memoizes an unfingerprinted
+- the source-schema memo is LRU and never memoizes an unfingerprinted
   path.
 """
 
@@ -27,9 +27,10 @@ import subprocess
 import sys
 import textwrap
 import threading
-from collections import OrderedDict
 
 import pytest
+
+from mini_pandas_spark.memo import SessionMemo
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 PACKAGE = os.path.join(REPO, "mini_pandas_spark")
@@ -518,15 +519,14 @@ def _write_parquet(path: str, columns: dict) -> None:
 def test_source_schema_memo_is_lru(spark, tmp_path, monkeypatch):
     from mini_pandas_spark.streaming import windows
 
-    monkeypatch.setattr(windows, "_SOURCE_SCHEMA_MEMO", OrderedDict())
-    monkeypatch.setattr(windows, "_SOURCE_SCHEMA_MEMO_MAX", 2)
+    monkeypatch.setattr(windows, "_SOURCE_SCHEMA_MEMO", SessionMemo(2))
     paths = {}
     for name in "abc":
         paths[name] = str(tmp_path / f"{name}.parquet")
         _write_parquet(paths[name], {name: [1, 2]})
 
     def cached() -> set:
-        return {k[0] for k in windows._SOURCE_SCHEMA_MEMO}
+        return {str(tmp_path / f"{k[0]}.parquet") for k in windows._SOURCE_SCHEMA_MEMO}
 
     windows._source_schema(spark, paths["a"])
     windows._source_schema(spark, paths["b"])
@@ -541,7 +541,7 @@ def test_source_schema_skips_memo_without_fingerprint(spark, tmp_path, monkeypat
     with new columns is seen."""
     from mini_pandas_spark.streaming import windows
 
-    monkeypatch.setattr(windows, "_SOURCE_SCHEMA_MEMO", OrderedDict())
+    monkeypatch.setattr(windows, "_SOURCE_SCHEMA_MEMO", SessionMemo(16))
     ds = tmp_path / "events_dir"
     ds.mkdir()
     _write_parquet(str(ds / "part-0.parquet"), {"a": [1]})

@@ -401,27 +401,28 @@ def test_bucket_memo_eviction_drops_tables_and_dirs(spark, monkeypatch):
     regeneration), while the surviving entry keeps working."""
     import os
 
+    from mini_pandas_spark.memo import SessionMemo
     from mini_pandas_spark.operators import relational
 
-    relational._BUCKET_MEMO.clear()
+    memo = SessionMemo(4)
+    monkeypatch.setattr(relational, "_BUCKET_MEMO", memo)
     old_names = relational._bucketed_order_tables(spark, SF)
-    (old_key,) = relational._BUCKET_MEMO.keys()
-    old_root = relational._BUCKET_MEMO[old_key][2]
+    (old_key,) = memo
+    (old_root,) = memo[old_key].dirs
     assert os.path.isdir(old_root)
     assert all(spark.catalog.tableExists(t) for t in old_names)
 
-    monkeypatch.setattr(relational, "_BUCKET_MEMO_MAX", 1)
+    memo.max_entries = 1
     new_names = relational._bucketed_order_tables(
         spark, "/root/testdata/sf0.01"
     )
     # the older entry was evicted WITH teardown...
-    assert old_key not in relational._BUCKET_MEMO
+    assert old_key not in list(memo)
     assert not any(spark.catalog.tableExists(t) for t in old_names)
     assert not os.path.exists(old_root)
     # ...and the survivor is intact and scannable
     assert all(spark.catalog.tableExists(t) for t in new_names)
     assert spark.table(new_names[0]).count() > 0
-    relational._BUCKET_MEMO.clear()
 
 
 def test_epoch_log_sink_first_commit_sweeps_stale_staged(spark, tmp_path):

@@ -656,9 +656,16 @@ def test_bloom_prefilter_bounds(spark):
     """The Bloom stage must pass every true match (no false negatives —
     a Bloom filter's defining guarantee) while pruning most of the fact
     table before the exact join."""
-    from mini_pandas_spark.operators.relational import bloom_prefilter_counts
+    from pyspark.sql import functions as F
 
-    total, bloom_passed, true_matches = bloom_prefilter_counts(spark, SF)
+    from mini_pandas_spark.operators.relational import _bloom_probe
+
+    orders, keys, passed = _bloom_probe(spark, SF)
+    total = orders.count()
+    bloom_passed = passed.count()
+    true_matches = orders.join(
+        F.broadcast(keys), F.col("o_custkey") == F.col("c_custkey"), "semi"
+    ).count()
     assert true_matches <= bloom_passed  # zero false negatives
     assert bloom_passed < total * 0.2  # real pruning (8 KB filter)
 

@@ -68,6 +68,7 @@ def test_quantizer_memo_fingerprint_and_lru(spark, tmp_path, monkeypatch):
     LRU-bounded."""
     from pyspark.sql import functions as F
 
+    from mini_pandas_spark.memo import SessionMemo
     from mini_pandas_spark.operators import similarity as sim
 
     def write_dir(name, scale):
@@ -85,7 +86,7 @@ def test_quantizer_memo_fingerprint_and_lru(spark, tmp_path, monkeypatch):
         )
         return str(out)
 
-    monkeypatch.setattr(sim, "_QUANTIZER_MEMO", type(sim._QUANTIZER_MEMO)())
+    monkeypatch.setattr(sim, "_QUANTIZER_MEMO", SessionMemo(8))
     d1, d2 = write_dir("sfA", 1.0), write_dir("sfB", 2.0)
 
     def train(d):
@@ -104,6 +105,6 @@ def test_quantizer_memo_fingerprint_and_lru(spark, tmp_path, monkeypatch):
     assert r1b is not r1, "stale cell layout reused after fixture rewrite"
     assert len(sim._QUANTIZER_MEMO) == 3
 
-    monkeypatch.setattr(sim, "_QUANTIZER_MEMO_MAX", 2)
+    sim._QUANTIZER_MEMO.max_entries = 2
     train(write_dir("sfC", 4.0))
     assert len(sim._QUANTIZER_MEMO) <= 2  # LRU bound enforced

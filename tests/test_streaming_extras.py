@@ -372,7 +372,7 @@ def test_outer_join_emits_final_watermark_band(spark):
 def test_sentinel_dir_supports_directory_layout_fixture(spark, tmp_path):
     """Round-8 advice: _events_dir_with_sentinels must accept the
     fixture layout where events.parquet is a DIRECTORY of part files
-    (the layout _events_fingerprint already supports) by flattening the
+    (the layout memo.table_fingerprint already supports) by flattening the
     parts into the sentinel dir — and the outer-join drain over it must
     equal the single-file-layout drain exactly."""
     import os
