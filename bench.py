@@ -249,9 +249,9 @@ def final_line(result: dict, budget: int = FINAL_BUDGET) -> str:
 
 def warm(spark, sf_dir: str) -> None:
     """The unbilled warmup every timing tool runs before its timed rows
-    (bench.main, tools/profile_queries.py, tools/profile_streams.py):
-    engine warmups plus the standing-infrastructure builds listed in
-    BASELINE.md's 'Unbilled warmup inventory'."""
+    (bench.main and tools/profile_queries.py): engine warmups plus the
+    standing-infrastructure builds listed in BASELINE.md's 'Unbilled
+    warmup inventory'."""
     qs = queries()
 
     # Warmup (not billed): JVM/codegen, the Python worker pool (several

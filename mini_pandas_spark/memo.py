@@ -5,6 +5,7 @@ cache key, the LRU bound and the teardown of what an entry owns, and
 
 from __future__ import annotations
 
+import atexit
 import os
 import shutil
 import tempfile
@@ -29,7 +30,11 @@ def scratch_dir(prefix: str) -> str:
     hosts bucketed/layout stage tables — ADVICE r11), else the tempfile
     default.  All artifacts remain session-ephemeral and LRU-evicted
     via the memos — nothing here changes what persists, only where
-    scratch lives."""
+    scratch lives.
+
+    Every dir made here is removed when the process that made it exits
+    (``_remove_own_scratch``); nothing is removed earlier, because the
+    DataFrames a query returns read their dirs lazily."""
     base = os.environ.get("SPARK_GRAFT_SCRATCH")
     if not base and os.path.isdir("/dev/shm") and os.access("/dev/shm", os.W_OK):
         try:
@@ -40,8 +45,23 @@ def scratch_dir(prefix: str) -> str:
             pass
     if base:
         os.makedirs(base, exist_ok=True)
-        return tempfile.mkdtemp(prefix=prefix, dir=base)
-    return tempfile.mkdtemp(prefix=prefix)
+    path = tempfile.mkdtemp(prefix=prefix, dir=base or None)
+    _MADE.append((os.getpid(), path))
+    return path
+
+
+# (pid, dir) of every scratch dir made in this process or, before a
+# fork, in its parent: a forked Python worker inherits the list and must
+# never delete the driver's dirs.
+_MADE: list[tuple[int, str]] = []
+
+
+@atexit.register
+def _remove_own_scratch() -> None:
+    pid = os.getpid()
+    for owner, path in _MADE:
+        if owner == pid:
+            shutil.rmtree(path, ignore_errors=True)
 
 
 def table_fingerprint(sf_dir: str, name: str):

@@ -58,6 +58,17 @@ _FMT = "yyyy-MM-dd HH:mm:ss"
 _STATE_CKPT_MEMO = SessionMemo(6)
 
 
+def _has_commits(ck: str) -> bool:
+    """True once checkpoint ``ck`` has committed a micro-batch.  An EMPTY
+    source drains zero micro-batches, so there is no committed state to
+    read: callers answer with an empty frame of their schema instead of
+    failing with STDS_COMMITTED_BATCH_UNAVAILABLE."""
+    commits = os.path.join(ck, "commits")
+    return os.path.isdir(commits) and any(
+        not f.startswith(".") for f in os.listdir(commits)
+    )
+
+
 def _user_totals_state_checkpoint(spark: SparkSession, sf_dir: str) -> str:
     """Drain the unwatermarked per-user totals aggregation once,
     returning the checkpoint dir whose state store now holds the final
@@ -143,13 +154,7 @@ def state_store_user_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     streaming aggregation, via Spark 4's State Data Source reader —
     state-file decoding gated by the plain GROUP BY oracle."""
     ck = _user_totals_state_checkpoint(spark, sf_dir)
-    commits = os.path.join(ck, "commits")
-    if not os.path.isdir(commits) or not any(
-        not f.startswith(".") for f in os.listdir(commits)
-    ):
-        # an EMPTY source drains zero micro-batches, so there is no
-        # committed state to read — the zero-key corpus answer is an
-        # empty frame, not STDS_COMMITTED_BATCH_UNAVAILABLE
+    if not _has_commits(ck):
         return spark.createDataFrame(
             [], "user_id long, cents_sum long, n_events long, last_ts string"
         )
@@ -310,10 +315,7 @@ def join_state_buffered_sides(spark: SparkSession, sf_dir: str) -> DataFrame:
     comment in streaming_outer_join_attribution).
     """
     ck = _outer_join_state_checkpoint(spark, sf_dir)
-    commits = os.path.join(ck, "commits")
-    if not os.path.isdir(commits) or not any(
-        not f.startswith(".") for f in os.listdir(commits)
-    ):
+    if not _has_commits(ck):
         return spark.createDataFrame(
             [], "side string, event_id long, user_id long, buffered_ts string"
         )
@@ -354,10 +356,7 @@ def state_evolution_snapshots(spark: SparkSession, sf_dir: str) -> DataFrame:
     give: diff the state between two batches to find the keys a
     regression touched, without replaying any input."""
     ck = _evolution_checkpoint(spark, sf_dir)
-    commits = os.path.join(ck, "commits")
-    if not os.path.isdir(commits) or not any(
-        not f.startswith(".") for f in os.listdir(commits)
-    ):
+    if not _has_commits(ck):
         return spark.createDataFrame(
             [], "snapshot_batch long, user_id long, cents_sum long, n_events long"
         )
@@ -418,10 +417,7 @@ def state_metadata_overview(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     out = empty
     for label, ck in (("agg", agg_ck), ("join", join_ck)):
-        commits = os.path.join(ck, "commits")
-        if not os.path.isdir(commits) or not any(
-            not f.startswith(".") for f in os.listdir(commits)
-        ):
+        if not _has_commits(ck):
             continue
         md = spark.read.format("state-metadata").load(ck)
         out = out.unionByName(
@@ -458,10 +454,7 @@ def state_change_feed_user_totals(spark: SparkSession, sf_dir: str) -> DataFrame
     state-source read.
     """
     ck = _evolution_checkpoint(spark, sf_dir)
-    commits = os.path.join(ck, "commits")
-    if not os.path.isdir(commits) or not any(
-        not f.startswith(".") for f in os.listdir(commits)
-    ):
+    if not _has_commits(ck):
         return spark.createDataFrame(
             [],
             "batch_id long, change_type string, user_id long,"
@@ -518,10 +511,7 @@ def join_state_change_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
     join_state_buffered_sides.
     """
     ck = _outer_join_state_checkpoint(spark, sf_dir)
-    commits = os.path.join(ck, "commits")
-    if not os.path.isdir(commits) or not any(
-        not f.startswith(".") for f in os.listdir(commits)
-    ):
+    if not _has_commits(ck):
         return spark.createDataFrame(
             [],
             "batch_id long, change_type string, side string,"

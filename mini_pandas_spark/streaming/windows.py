@@ -502,101 +502,6 @@ def streaming_sliding_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     )[0]
 
 
-def stateful_sessionize_stream(
-    spark: SparkSession,
-    src_dir: str,
-    schema: str = "ts timestamp, user_id long",
-    gap_minutes: int = 30,
-    watermark: str = "10 minutes",
-    max_files_per_trigger: int = 1,
-) -> DataFrame:
-    """Custom stateful sessionizer with EVENT-TIME TIMEOUTS
-    (applyInPandasWithState + GroupStateTimeout.EventTimeTimeout): per
-    user, events within ``gap_minutes`` of each other merge into one
-    session; a session is EMITTED only when the watermark passes its
-    last event + gap — i.e. when no in-order event can extend it.
-
-    This is the surface session_window(...) cannot express: the state
-    payload is arbitrary (here start/last/count; in production: the
-    session's event-type path, device handoffs, custom reducers), and
-    the timeout machinery — not window merging — decides finalization.
-    State per key is O(1); the shuffle is one exchange on user_id, and
-    state evicts itself at timeout, so a 100 TB stream holds state only
-    for sessions that are still open.
-
-    Returns the drained (AvailableNow) memory-sink frame: one row per
-    CLOSED session — sessions still open when the input ends stay in
-    state, exactly as they would on a live stream.
-    """
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    ensure_runtime_confs(spark)
-    gap_ms = gap_minutes * 60_000
-
-    def sessionize(key, pdfs, state):
-        # self-contained: pickled by value, imports inside
-        import pandas as pd
-
-        (user_id,) = key
-        out_start, out_n = [], []
-
-        if state.hasTimedOut:
-            start_ms, last_ms, n = state.get
-            out_start.append(start_ms)
-            out_n.append(n)
-            state.remove()
-        else:
-            ts_ms = sorted(
-                int(t.value // 1_000_000)
-                for pdf in pdfs
-                for t in pd.to_datetime(pdf["ts"])
-            )
-            if ts_ms:
-                if state.exists:
-                    start_ms, last_ms, n = state.get
-                else:
-                    start_ms, last_ms, n = ts_ms[0], ts_ms[0], 0
-                for t in ts_ms:
-                    if t - last_ms > gap_ms and n > 0:
-                        out_start.append(start_ms)
-                        out_n.append(n)
-                        start_ms, n = t, 0
-                    last_ms = max(last_ms, t)
-                    n += 1
-                state.update((start_ms, last_ms, n))
-                # fire once no in-order event can extend the session;
-                # clamp above the watermark (setting a timeout at or
-                # below it is an error for late-but-accepted events)
-                wm = state.getCurrentWatermarkMs()
-                state.setTimeoutTimestamp(max(last_ms + gap_ms + 1, wm + 1))
-
-        yield pd.DataFrame(
-            {
-                "user_id": [user_id] * len(out_n),
-                "session_start_ms": out_start,
-                "n_events": out_n,
-            }
-        )
-
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(src_dir)
-    )
-    sessions = (
-        stream.withWatermark("ts", watermark)
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            sessionize,
-            outputStructType="user_id long, session_start_ms long, n_events long",
-            stateStructType="start_ms long, last_ms long, n long",
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.EventTimeTimeout,
-        )
-    )
-    return _drain_to_memory(spark, sessions, "append")[0]
-
-
 def streaming_hourly_approx_uniques(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Approximate distinct users per tumbling hour under Structured
     Streaming: watermarked window + approx_count_distinct — the

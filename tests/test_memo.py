@@ -4,6 +4,8 @@
   runs once per evicted entry, an unfingerprintable table is built but
   never stored, a vanished owned dir is rebuilt, and the key spells
   ``sf_dir`` one way;
+- ``scratch_dir``'s dirs are removed when the process that made them
+  exits, and a forked child never removes its parent's;
 - an AST lint: outside ``memo.py`` the package hand-rolls no LRU memo
   (no ``move_to_end``, no ``evict_lru*``, no module-level
   ``OrderedDict()``) and computes no ``table_fingerprint`` itself;
@@ -17,6 +19,9 @@ from __future__ import annotations
 import ast
 import os
 import shutil
+import subprocess
+import sys
+import textwrap
 from types import SimpleNamespace
 
 import pytest
@@ -178,6 +183,29 @@ def memo_lint_violations(source: str, filename: str) -> list:
         ):
             found.append(f"{filename}:{stmt.lineno} module-level OrderedDict()")
     return found
+
+
+def test_scratch_dirs_go_when_their_process_exits(tmp_path):
+    script = textwrap.dedent(
+        """
+        import os, sys
+        from mini_pandas_spark.memo import scratch_dir
+
+        mine = scratch_dir("parent_a_")
+        pid = os.fork()
+        if pid == 0:  # like a forked Python worker, but exiting through atexit
+            scratch_dir("child_")
+            sys.exit(0)
+        os.waitpid(pid, 0)
+        assert os.path.isdir(mine), "the child removed its parent's dir"
+        scratch_dir("parent_b_")
+        """
+    )
+    subprocess.run(
+        [sys.executable, "-c", script], cwd=REPO, check=True,
+        env={**os.environ, "SPARK_GRAFT_SCRATCH": str(tmp_path)},
+    )
+    assert os.listdir(tmp_path) == []
 
 
 def test_memo_lint_catches_hand_rolled_memos():

@@ -178,53 +178,6 @@ def test_checkpoint_restart_is_exactly_once(spark, tmp_path):
     assert got == [1, 2, 3, 4, 5, 6], got  # a.parquet NOT reprocessed
 
 
-def test_stateful_sessionizer_event_time_timeout(spark, tmp_path):
-    """Event-time-timeout sessionization: a session is emitted ONLY
-    after the watermark passes its last event + gap; the final open
-    session stays in state (un-emitted), exactly as on a live stream."""
-    import time as _t
-
-    import pandas as pd
-
-    from mini_pandas_spark.streaming.windows import stateful_sessionize_stream
-
-    d = str(tmp_path / "sess_src")
-    os.makedirs(d)
-    base = int(_t.time()) - 100
-
-    def write(path, rows, mtime):
-        pdf = pd.DataFrame(
-            {"ts": pd.to_datetime([r[0] for r in rows]).astype("datetime64[us]"),
-             "user_id": [r[1] for r in rows]}
-        )
-        pdf.to_parquet(path)
-        os.utime(path, (mtime, mtime))
-
-    # u1: two events 10:00/10:10 (one session), then 15:00 (new session)
-    # u2: 10:05 single-event session
-    write(f"{d}/a.parquet", [("2024-01-01 10:00", 1), ("2024-01-01 10:10", 1),
-                             ("2024-01-01 10:05", 2)], base)
-    # advances watermark to 14:50 → closes the 10:00 sessions of u1+u2
-    write(f"{d}/b.parquet", [("2024-01-01 15:00", 1)], base + 1)
-    # advances watermark to 16:20 → closes u1's 15:00 session; 16:30
-    # session for u2 remains OPEN at drain end
-    write(f"{d}/c.parquet", [("2024-01-01 16:30", 2)], base + 2)
-
-    got = sorted(
-        (r["user_id"], r["session_start_ms"], r["n_events"])
-        for r in stateful_sessionize_stream(spark, d).collect()
-    )
-
-    def ms(s):
-        return int(pd.Timestamp(s).value // 1_000_000)
-
-    assert got == [
-        (1, ms("2024-01-01 10:00"), 2),
-        (1, ms("2024-01-01 15:00"), 1),
-        (2, ms("2024-01-01 10:05"), 1),
-    ], got
-
-
 def test_streaming_approx_uniques_equals_batch_twin(spark):
     """HLL++ is hash-based and order-insensitive, so draining the
     watermarked stream (AvailableNow) must produce the EXACT same
