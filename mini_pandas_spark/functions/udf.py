@@ -1,20 +1,14 @@
 """UDF registration surface (SURVEY.md §2.4).
 
 The reference has no UDFs; this engine exposes the full Spark UDF family
-but keeps every built-in operator UDF-free.  The wrappers exist so users
-of the engine register functions through one audited entry point that
-defaults to the Arrow-vectorized path.
+but keeps every built-in operator UDF-free.  The wrapper exists so users
+of the engine register functions through one audited entry point on the
+Arrow-vectorized path.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import SparkSession
-
-
-def register_python_udf(spark: SparkSession, name: str, fn, return_type: str):
-    """Row-at-a-time Python UDF — the slow path; prefer
-    register_pandas_udf.  Registered for SQL and DataFrame use."""
-    return spark.udf.register(name, fn, return_type)
 
 
 def register_pandas_udf(spark: SparkSession, name: str, fn, return_type: str):

@@ -8,8 +8,15 @@ tuned profile.
 
 from __future__ import annotations
 
+import glob
+import hashlib
 import os
+import shutil
+import subprocess
+import tempfile
+import zipfile
 
+import pyspark
 from pyspark.sql import SparkSession
 
 # Confs that must be present for this repo's datasets / plan quality.
@@ -48,6 +55,70 @@ def ensure_runtime_confs(spark: SparkSession) -> SparkSession:
     return spark
 
 
+# The fork-free local file system (jvm/NioLocalFileSystem.java), compiled
+# once per source + Hadoop jar into a cache next to the source, the way
+# __pycache__ works.
+NIO_FS_CLASS = "mini_pandas_spark.jvm.NioLocalFileSystem"
+_NIO_FS_SOURCE = os.path.join(
+    os.path.dirname(os.path.abspath(__file__)), "jvm", "NioLocalFileSystem.java"
+)
+JAR_CACHE = os.path.join(os.path.dirname(_NIO_FS_SOURCE), "__jarcache__")
+JAVAC_TIMEOUT_S = 120
+
+
+def _compile_jar(javac: str, hadoop_jar: str, jar: str) -> None:
+    """javac the source against ``hadoop_jar`` and write the classes to
+    ``jar`` atomically (temp file, then ``os.replace``)."""
+    os.makedirs(os.path.dirname(jar), exist_ok=True)
+    tmp = tempfile.mkdtemp(prefix=".build-", dir=os.path.dirname(jar))
+    try:
+        classes = os.path.join(tmp, "classes")
+        subprocess.run(
+            [javac, "--release", "17", "-nowarn", "-cp", hadoop_jar,
+             "-d", classes, _NIO_FS_SOURCE],
+            check=True, capture_output=True, timeout=JAVAC_TIMEOUT_S,
+        )
+        staged = os.path.join(tmp, "out.jar")
+        with zipfile.ZipFile(staged, "w") as zf:
+            for root, _, files in os.walk(classes):
+                for f in files:
+                    path = os.path.join(root, f)
+                    zf.write(path, os.path.relpath(path, classes))
+        os.replace(staged, jar)
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
+
+
+def local_fs_confs() -> dict[str, str]:
+    """Builder confs that swap Hadoop's local file system for
+    ``NioLocalFileSystem``, or ``{}`` when its jar cannot be had.
+
+    Without libhadoop, ``RawLocalFileSystem.setPermission`` forks
+    ``chmod`` for every permissioned create and mkdir: every checkpoint,
+    state-store and parquet file a drain or a write makes.  The jar is
+    built at most once per hash of the source and the Hadoop jar name;
+    when javac is missing, fails or times out, or the cache is
+    unwritable, this returns ``{}`` and the session keeps the stock file
+    system.  Speed only: results never depend on which one runs (the
+    driver's bare session keeps the stock one)."""
+    spark_home = os.environ.get("SPARK_HOME") or os.path.dirname(pyspark.__file__)
+    hadoop = sorted(glob.glob(os.path.join(spark_home, "jars", "hadoop-client-api-*.jar")))
+    if not hadoop:
+        return {}
+    with open(_NIO_FS_SOURCE, "rb") as fh:
+        key = hashlib.sha256(fh.read() + os.path.basename(hadoop[-1]).encode())
+    jar = os.path.join(JAR_CACHE, f"NioLocalFileSystem-{key.hexdigest()[:16]}.jar")
+    if not os.path.exists(jar):
+        javac = shutil.which("javac")
+        if javac is None:
+            return {}
+        try:
+            _compile_jar(javac, hadoop[-1], jar)
+        except (OSError, subprocess.SubprocessError):
+            return {}
+    return {"spark.driver.extraClassPath": jar, "spark.hadoop.fs.file.impl": NIO_FS_CLASS}
+
+
 def get_spark(
     app_name: str = "mini-pandas-spark",
     cpus: int | None = None,
@@ -61,6 +132,14 @@ def get_spark(
     ``extra_confs`` are applied at BUILD time — required for static
     confs (e.g. spark.io.compression.codec) that reject runtime sets;
     they only take effect when this call actually creates the session.
+
+    The builder also carries ``local_fs_confs()``: the fork-free local
+    file system's jar on ``spark.driver.extraClassPath`` (after any
+    caller value) and its class as ``spark.hadoop.fs.file.impl``.  The
+    first build per source hash runs javac (about a second); when that
+    cannot work the session is built exactly as without it.  Which file
+    system a session runs shows in its ``spark.hadoop.fs.file.impl``
+    (unset: Hadoop's stock one).
     """
     if cpus is None:
         cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "0") or 0)
@@ -78,7 +157,12 @@ def get_spark(
     )
     for k, v in RUNTIME_CONFS.items():
         builder = builder.config(k, v)
+    confs = local_fs_confs()
     for k, v in (extra_confs or {}).items():
+        if k == "spark.driver.extraClassPath" and k in confs:
+            v = v + os.pathsep + confs[k]
+        confs[k] = v
+    for k, v in confs.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")

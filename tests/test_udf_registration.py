@@ -1,15 +1,9 @@
-"""UDF registration surface (SURVEY.md §2.4): both the row-at-a-time and
-Arrow-vectorized paths register for SQL use and compute correctly."""
+"""UDF registration surface (SURVEY.md §2.4): the Arrow-vectorized path
+registers for SQL use and computes correctly."""
 
 from pyspark.sql import functions as F
 
-from mini_pandas_spark.functions.udf import register_pandas_udf, register_python_udf
-
-
-def test_register_python_udf(spark):
-    register_python_udf(spark, "add_one_py", lambda x: x + 1, "long")
-    out = spark.sql("SELECT add_one_py(41) AS v").collect()
-    assert out[0]["v"] == 42
+from mini_pandas_spark.functions.udf import register_pandas_udf
 
 
 def test_register_pandas_udf(spark):

@@ -55,6 +55,7 @@ from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 from mini_pandas_spark.plans import scan_output_rows  # noqa: E402
+from mini_pandas_spark.session import get_spark  # noqa: E402
 from mini_pandas_spark.operators.layout import (
     BOX_PART_HI,
     BOX_PART_LO,
@@ -118,16 +119,12 @@ def main() -> int:
     args = ap.parse_args()
     mults = [int(x) for x in args.mults.split(",")]
 
-    spark = (
-        SparkSession.builder.master(
-            f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]"
-        )
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", "16g")
-        .getOrCreate()
+    spark = get_spark(
+        "layout-scale-stress",
+        cpus=int(os.environ.get("SPARK_GRAFT_CPUS", "32")),
+        shuffle_partitions=32,
+        extra_confs={"spark.driver.memory": "16g"},
     )
-    spark.sparkContext.setLogLevel("ERROR")
 
     rows = []
     print(

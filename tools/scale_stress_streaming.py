@@ -36,6 +36,7 @@ from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 from mini_pandas_spark.streaming.windows import _drain_to_memory
+from mini_pandas_spark.session import get_spark
 
 BASE = "/root/testdata/sf0.1"
 ROCKSDB = (
@@ -141,16 +142,12 @@ def main() -> int:
     args = ap.parse_args()
     mults = [int(x) for x in args.mults.split(",")]
 
-    spark = (
-        SparkSession.builder.master(
-            f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]"
-        )
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", "16g")
-        .getOrCreate()
+    spark = get_spark(
+        "streaming-scale-stress",
+        cpus=int(os.environ.get("SPARK_GRAFT_CPUS", "32")),
+        shuffle_partitions=32,
+        extra_confs={"spark.driver.memory": "16g"},
     )
-    spark.sparkContext.setLogLevel("ERROR")
 
     rows = []
     print(
