@@ -26,14 +26,18 @@ from __future__ import annotations
 
 import glob as _glob
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..memo import Owned, SessionMemo, scratch_dir
 from ..sources.tables import ensure_runtime_confs
-from .windows import BOUNDED_KEY_PARTITIONS, _drain_confs
+from .windows import (
+    BOUNDED_KEY_PARTITIONS,
+    _drain_confs,
+    _write_one_parquet,
+    read_fixture_stream,
+)
 
 _INGEST_MEMO = SessionMemo(4)
 
@@ -44,24 +48,17 @@ def _ingest_artifacts(spark: SparkSession, sf_dir: str):
     ensure_runtime_confs(spark)
 
     def build() -> Owned:
-        src_file = os.path.join(sf_dir, "events.parquet")
-        raw = spark.read.parquet(src_file)
+        raw = spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
         src = scratch_dir("ingest_src_")
         sink = scratch_dir("ingest_sink_")
         ck = scratch_dir("ingest_ck_")
 
         def stage_third(mod: int, order: int) -> None:
-            stage = os.path.join(src, "_stage")
-            (
-                raw.where(F.col("event_id") % 3 == mod)
-                .coalesce(1)
-                .write.parquet(stage)
+            _write_one_parquet(  # mtime order = arrival order
+                raw.where(F.col("event_id") % 3 == mod),
+                os.path.join(src, f"arrival_{order:02d}.parquet"),
+                100 + order,
             )
-            (part,) = _glob.glob(os.path.join(stage, "part-*.parquet"))
-            dest = os.path.join(src, f"arrival_{order:02d}.parquet")
-            shutil.copy(part, dest)
-            shutil.rmtree(stage)
-            os.utime(dest, (order, 100 + order))  # mtime order = arrival order
 
         def write_batch(bdf, batch_id: int) -> None:
             # idempotent per-batch sink: overwrite-by-batchId makes a
@@ -79,12 +76,7 @@ def _ingest_artifacts(spark: SparkSession, sf_dir: str):
             )
 
         def drain() -> None:
-            stream = (
-                spark.readStream.schema(raw.schema)
-                .format("parquet")
-                .option("pathGlobFilter", "*.parquet")
-                .load(src)
-            )
+            stream = read_fixture_stream(spark, sf_dir, "events", src)
             with _drain_confs(spark, partitions=BOUNDED_KEY_PARTITIONS):
                 q = (
                     stream.writeStream.foreachBatch(write_batch)

@@ -35,7 +35,6 @@ buffer itself (rounded BEFORE the sum, so the buffer is a bigint).
 from __future__ import annotations
 
 import os
-import shutil
 
 from ..memo import Owned, SessionMemo, scratch_dir
 
@@ -45,9 +44,12 @@ from pyspark.sql import functions as F
 from ..sources.tables import ensure_runtime_confs
 from .windows import (
     BOUNDED_KEY_PARTITIONS,
+    OUTER_JOIN_STATE_PARTITIONS,
+    _attribution_join,
     _drain_to_memory,
-    _source_schema,
+    _write_one_parquet,
     read_events_stream,
+    read_fixture_stream,
 )
 
 _FMT = "yyyy-MM-dd HH:mm:ss"
@@ -174,32 +176,19 @@ def _evolution_checkpoint(spark: SparkSession, sf_dir: str) -> str:
     with maxFilesPerTrigger=1, so batch 0's committed state is the
     even-half totals and the latest state is the full totals.  Memoized
     per (session, fixture) like the user-totals checkpoint."""
-    import glob as _glob
-
     ensure_runtime_confs(spark)
 
     def build() -> Owned:
-        src = os.path.join(sf_dir, "events.parquet")
-        raw = spark.read.parquet(src)
+        raw = spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
         root = scratch_dir("state_evo_src_")
-        for i, parity in enumerate((0, 1)):
-            stage = os.path.join(root, "_stage")
-            (
-                raw.where(F.col("event_id") % 2 == parity)
-                .coalesce(1)
-                .write.parquet(stage)
+        for i in (0, 1):  # mtime order fixes batch order
+            _write_one_parquet(
+                raw.where(F.col("event_id") % 2 == i),
+                os.path.join(root, f"half_{i}.parquet"),
+                100 + i,
             )
-            (part,) = _glob.glob(os.path.join(stage, "part-*.parquet"))
-            dest = os.path.join(root, f"half_{i}.parquet")
-            shutil.copy(part, dest)
-            shutil.rmtree(stage)
-            os.utime(dest, (i, 100 + i))  # mtime order fixes batch order
         agg = (
-            spark.readStream.schema(raw.schema)
-            .format("parquet")
-            .option("pathGlobFilter", "*.parquet")
-            .option("maxFilesPerTrigger", "1")
-            .load(root)
+            read_fixture_stream(spark, sf_dir, "events", root, maxFilesPerTrigger=1)
             .groupBy("user_id")
             .agg(
                 F.sum(F.round(F.col("value") * 100).cast("bigint")).alias("cents"),
@@ -216,69 +205,19 @@ def _evolution_checkpoint(spark: SparkSession, sf_dir: str) -> str:
 
 
 def _outer_join_state_checkpoint(spark: SparkSession, sf_dir: str) -> str:
-    """Drain the watermarked LEFT OUTER purchase<-error stream-stream
-    join (the streaming_outer_join_attribution topology) once with an
-    EXPLICIT checkpoint, so its join state is readable afterwards.
-    Memoized per (session, fixture); reuses the memoized
-    sentinel-augmented events dir (owned by _SENTINEL_DIRS — this
-    memo's entry owns only the checkpoint)."""
-    from .windows import (
-        OUTER_JOIN_STATE_PARTITIONS,
-        _events_dir_with_sentinels,
-    )
-
+    """Drain ``windows._attribution_join`` (the
+    streaming_outer_join_attribution stream) once with an EXPLICIT
+    checkpoint, so its join state is readable afterwards.  Memoized per
+    (session, fixture); the sentinel-augmented events dir it streams is
+    owned by its own memo (``_SENTINEL_DIRS``) — this memo's entry owns
+    only the checkpoint."""
     ensure_runtime_confs(spark)
 
     def build() -> Owned:
-        root = _events_dir_with_sentinels(spark, sf_dir)
-        schema = _source_schema(spark, os.path.join(sf_dir, "events.parquet"))
-        raw = (
-            spark.readStream.schema(schema)
-            .format("parquet")
-            .option("pathGlobFilter", "*.parquet")
-            .load(root)
-        )
-        ts_type = schema["ts"].dataType.simpleString()
-        ts = (
-            F.timestamp_micros(F.expr("ts div 1000"))
-            if ts_type == "bigint"
-            else F.col("ts").cast("timestamp")
-        )
-        ev = raw.withColumn("ts", ts)
-        purchases = (
-            ev.filter(F.col("event_type") == "purchase")
-            .select(
-                F.col("event_id").alias("purchase_id"),
-                F.col("user_id").alias("p_user"),
-                F.col("ts").alias("p_ts"),
-            )
-            .withWatermark("p_ts", "1 hour")
-        )
-        errors = (
-            ev.filter(F.col("event_type") == "error")
-            .select(
-                F.col("event_id").alias("error_id"),
-                F.col("user_id").alias("e_user"),
-                F.col("ts").alias("e_ts"),
-            )
-            .withWatermark("e_ts", "1 hour")
-        )
-        joined = purchases.join(
-            errors,
-            F.expr(
-                "p_user = e_user AND e_ts >= p_ts "
-                "AND e_ts <= p_ts + INTERVAL '30' MINUTE"
-            ),
-            "leftOuter",
-        ).select(
-            "purchase_id",
-            F.col("p_user").alias("user_id"),
-            F.coalesce(F.col("error_id"), F.lit(-1)).cast("long").alias("error_id"),
-        )
         ck = scratch_dir("join_state_ck_")
         _drain_to_memory(
             spark,
-            joined,
+            _attribution_join(spark, sf_dir),
             "append",
             checkpoint=ck,
             partitions=OUTER_JOIN_STATE_PARTITIONS,

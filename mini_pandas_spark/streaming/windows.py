@@ -7,9 +7,9 @@ provides the mandated streaming-ready surface (SURVEY.md §2.3 row 12): the
 definition of correctness.
 
 Execution model notes:
-- the parquet source is read with an explicit schema (required for
-  streaming) matching the nanos-as-long quirk, then converted to
-  TIMESTAMP_NTZ exactly like the batch loader;
+- every fixture stream is read by ``read_fixture_stream``: an explicit
+  schema (required for streaming) from the file's footer, and events'
+  ``ts`` normalized to the batch loader's instants;
 - ``streaming_hourly_counts`` runs with Trigger.AvailableNow against the
   static events file and lands in a memory sink — over a single
   micro-batch the watermark drops nothing, so the result equals the batch
@@ -22,7 +22,9 @@ Execution model notes:
 
 from __future__ import annotations
 
+import glob
 import os
+import shutil
 import threading
 import uuid
 import weakref
@@ -220,11 +222,10 @@ def _drain_to_memory(
     return _drained_table(spark, sink), _input_rows(q)
 
 
-# Footer-read schema memo for streaming sources: every drain needs an
-# explicit schema, previously via a fresh batch read (driver footer
-# read, ~50-150 ms) per call — ~18 call sites across the family pay it
-# once per billed row.  Schemas are session-independent, so the key
-# carries no applicationId.
+# Footer-read schema memo for fixture streams: a file-stream source needs
+# an explicit schema, and a fresh batch read per drain costs a driver
+# footer read (~50-150 ms).  Its one call site is read_fixture_stream.
+# Schemas are session-independent, so the key carries no applicationId.
 _SOURCE_SCHEMA_MEMO = SessionMemo(16)
 
 
@@ -240,39 +241,79 @@ def _source_schema(spark: SparkSession, path: str):
     )
 
 
-def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming scan of the events table with the same ts normalization
-    as the batch loader (sources/tables.py).
+def read_fixture_stream(
+    spark: SparkSession,
+    sf_dir: str,
+    table: str,
+    root: str | None = None,
+    **options,
+) -> DataFrame:
+    """The one file-stream reader of a fixture table: every drain that
+    streams ``<sf_dir>/<table>.parquet`` (or files staged from it) starts
+    here.
 
-    The file-stream source requires an explicit schema, but the fixture's
-    ``ts`` physical type has changed across driver-generated datasets
-    (TIMESTAMP(NANOS) → epoch-nanos long under ``nanosAsLong``; later
-    TIMESTAMP(MICROS) → timestamp_ntz), so the schema is taken from a
-    one-off batch read of the same file — a metadata-only footer read —
-    and ``ts`` is normalized per its arrived type, never by assumption.
-    Hardcoding the nanos layout silently shifted every event to 1970 when
-    the fixture switched to micros (caught by the sf0.1 oracle sweep).
+    The schema is the fixture's own, from one memoized footer read
+    (``_source_schema``).  What is streamed:
+
+    - ``root`` given: every ``*.parquet`` file directly under that staged
+      dir (the sentinel, evolution and ingest dirs);
+    - the table is a directory-layout dataset: that directory;
+    - the table is a single file: ``sf_dir`` with a ``pathGlobFilter``
+      on the file name (the file-stream source needs a directory).  The
+      glob matches leaf file names only, so applied to a directory
+      layout it would silently drain zero rows — hence the branch above.
+
+    ``options`` are passed to the stream reader (``maxFilesPerTrigger``).
+
+    For ``events``, ``ts`` is normalized per its arrived physical type,
+    never by assumption: the fixture's type has changed across
+    driver-generated datasets (TIMESTAMP(NANOS) → epoch-nanos long under
+    ``nanosAsLong``; later TIMESTAMP(MICROS) → timestamp_ntz).
+    Hardcoding the nanos layout silently shifted every event to 1970
+    when the fixture switched to micros (caught by the sf0.1 oracle
+    sweep).  Either way ``ts`` leaves as the tz-aware timestamp that
+    watermarks need, holding the batch loader's instants
+    (sources/tables.py).
     """
     ensure_runtime_confs(spark)
-    path = os.path.join(sf_dir, "events.parquet")
+    path = os.path.join(sf_dir, f"{table}.parquet")
     schema = _source_schema(spark, path)
-    # The file-stream source requires a directory: stream the sf dir with a
-    # glob filter selecting only the events file.
-    raw = (
-        spark.readStream.schema(schema)
-        .format("parquet")
-        .option("pathGlobFilter", "events.parquet")
-        .load(sf_dir)
-    )
-    ts_type = schema["ts"].dataType.simpleString()
-    if ts_type == "bigint":  # TIMESTAMP(NANOS) fixture under nanosAsLong
+    reader = spark.readStream.schema(schema).format("parquet").options(**options)
+    if root is not None:
+        raw = reader.option("pathGlobFilter", "*.parquet").load(root)
+    elif os.path.isdir(path):
+        raw = reader.load(path)
+    else:
+        raw = reader.option("pathGlobFilter", f"{table}.parquet").load(sf_dir)
+    if table != "events":
+        return raw
+    if schema["ts"].dataType.simpleString() == "bigint":  # nanosAsLong
         ts = F.timestamp_micros(F.expr("ts div 1000"))
     else:
-        # timestamp_ntz (or timestamp): watermarks require the tz-aware
-        # type; session tz is pinned to UTC (RUNTIME_CONFS) so the cast is
-        # a re-tag, and formatted output matches the batch/NTZ path.
+        # timestamp_ntz (or timestamp): session tz is pinned to UTC
+        # (RUNTIME_CONFS), so the cast is a re-tag and formatted output
+        # matches the batch/NTZ path.
         ts = F.col("ts").cast("timestamp")
     return raw.withColumn("ts", ts)
+
+
+def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Streaming scan of the events fixture (``read_fixture_stream``)."""
+    return read_fixture_stream(spark, sf_dir, "events")
+
+
+def _write_one_parquet(frame: DataFrame, dest: str, mtime: int) -> None:
+    """Write ``frame`` as the single parquet file ``dest``, modified at
+    ``mtime``.  The file-stream source takes new files oldest first, so
+    the mtimes of staged files fix which micro-batch reads each.  Spark
+    writes into a ``_stage`` dir beside ``dest``; the stream's listing
+    skips ``_``-prefixed names, and the dir is gone on return."""
+    stage = os.path.join(os.path.dirname(dest), "_stage")
+    frame.coalesce(1).write.parquet(stage)
+    (part,) = glob.glob(os.path.join(stage, "part-*.parquet"))
+    os.replace(part, dest)
+    shutil.rmtree(stage)
+    os.utime(dest, (mtime, mtime))
 
 
 def streaming_hourly_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -369,6 +410,25 @@ def streaming_user_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _drain_to_memory(spark, agg, "update")[0]
 
 
+def _purchase_error_sides(ev: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """The two watermarked sides of every purchase/error stream-stream
+    join: ``(purchase_id, p_user, p_ts)`` and ``(error_id, e_user,
+    e_ts)``, each with a 1-hour watermark on its ts."""
+
+    def side(event_type: str, tag: str) -> DataFrame:
+        return (
+            ev.filter(F.col("event_type") == event_type)
+            .select(
+                F.col("event_id").alias(f"{event_type}_id"),
+                F.col("user_id").alias(f"{tag}_user"),
+                F.col("ts").alias(f"{tag}_ts"),
+            )
+            .withWatermark(f"{tag}_ts", "1 hour")
+        )
+
+    return side("purchase", "p"), side("error", "e")
+
+
 def stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stream-stream inner join: each 'error' event joined to the same
     user's 'purchase' events within the preceding 30 minutes — both
@@ -378,25 +438,7 @@ def stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     the equivalent batch time-range join, so it carries a full ANSI
     oracle — a stream-stream join gated by DuckDB.
     """
-    ev = read_events_stream(spark, sf_dir)
-    errors = (
-        ev.filter(F.col("event_type") == "error")
-        .select(
-            F.col("event_id").alias("error_id"),
-            F.col("user_id").alias("e_user"),
-            F.col("ts").alias("e_ts"),
-        )
-        .withWatermark("e_ts", "1 hour")
-    )
-    purchases = (
-        ev.filter(F.col("event_type") == "purchase")
-        .select(
-            F.col("event_id").alias("purchase_id"),
-            F.col("user_id").alias("p_user"),
-            F.col("ts").alias("p_ts"),
-        )
-        .withWatermark("p_ts", "1 hour")
-    )
+    purchases, errors = _purchase_error_sides(read_events_stream(spark, sf_dir))
     joined = errors.join(
         purchases,
         F.expr(
@@ -855,20 +897,10 @@ def streaming_coreset_moments(spark: SparkSession, sf_dir: str) -> DataFrame:
     At 100 TB the bigint Σq² would overflow (|q| ≤ ~5·10⁶ ⇒ q² ≤
     2.5·10¹³; >10⁵ rows per (cell, dim) risks 2⁶³) — the production
     variant sums DECIMAL(38,0); fixture cardinalities stay ≥4 orders
-    below the edge.  A zero-input drain raises (ADVICE r6 #1).
+    below the edge.  A zero-input drain raises: a fixture layout
+    ``read_fixture_stream`` no longer matches must fail loudly.
     """
-    ensure_runtime_confs(spark)
-    path = os.path.join(sf_dir, "embeddings.parquet")
-    schema = _source_schema(spark, path)
-    if os.path.isdir(path):
-        raw = spark.readStream.schema(schema).format("parquet").load(path)
-    else:
-        raw = (
-            spark.readStream.schema(schema)
-            .format("parquet")
-            .option("pathGlobFilter", "embeddings.parquet")
-            .load(sf_dir)
-        )
+    raw = read_fixture_stream(spark, sf_dir, "embeddings")
     cell = F.lit(0)
     for i in range(8):
         cell = cell + F.when(
@@ -894,7 +926,7 @@ def streaming_coreset_moments(spark: SparkSession, sf_dir: str) -> DataFrame:
     if n_in == 0:
         raise RuntimeError(
             "streaming_coreset_moments: the embedding stream read 0 rows — "
-            f"source layout under {sf_dir} no longer matches the reader"
+            f"source layout under {sf_dir} no longer matches read_fixture_stream"
         )
     return drained.select(
         "cell",
@@ -996,8 +1028,8 @@ def streaming_neardup_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     pair set equals the batch incremental_neardup_lsh, so this topology
     shares its exact cross-set Jaccard DuckDB oracle (same rounding,
     same ORDER BY applied on the drained result).  A zero-input drain
-    raises instead of returning an empty frame (a silently-unmatched
-    source layout must fail loudly — ADVICE r6 #1).
+    raises instead of returning an empty frame: a fixture layout
+    ``read_fixture_stream`` no longer matches must fail loudly.
     """
     from ..operators.dedup import (
         _SKETCH_SCHEMA,
@@ -1012,22 +1044,7 @@ def streaming_neardup_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus_bands = spark.table(bands_tbl)
     corpus_sets = spark.table(sets_tbl)
 
-    # document stream (schema from a footer-only batch read).  The
-    # fixture may be a single file or a directory-style dataset; stream
-    # the directory directly when it is one (pathGlobFilter matches leaf
-    # file names only, so a glob on the dataset name would silently
-    # drain zero rows from a directory layout — ADVICE r6 #1).
-    path = os.path.join(sf_dir, "documents.parquet")
-    schema = _source_schema(spark, path)
-    if os.path.isdir(path):
-        raw = spark.readStream.schema(schema).format("parquet").load(path)
-    else:
-        raw = (
-            spark.readStream.schema(schema)
-            .format("parquet")
-            .option("pathGlobFilter", "documents.parquet")
-            .load(sf_dir)
-        )
+    raw = read_fixture_stream(spark, sf_dir, "documents")
     # NOTE (round-12 negative result, kept so it isn't re-tried): the
     # single-file source yields one scan partition, so the in-stream
     # sketch looks like the one-Python-worker funnel fixed in
@@ -1080,8 +1097,7 @@ def streaming_neardup_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     if n_in == 0:
         raise RuntimeError(
             "streaming_neardup_lsh: the document stream read 0 rows — "
-            f"source layout under {sf_dir} no longer matches the reader "
-            "(ADVICE r6 #1: fail loudly instead of draining empty)"
+            f"source layout under {sf_dir} no longer matches read_fixture_stream"
         )
     return drained.orderBy("doc_new", "doc_old")
 
@@ -1135,7 +1151,7 @@ def streaming_dedup_user_days(spark: SparkSession, sf_dir: str) -> DataFrame:
     if n_in == 0:
         raise RuntimeError(
             "streaming_dedup_user_days: the event stream read 0 rows — "
-            f"source layout under {sf_dir} no longer matches the reader"
+            f"source layout under {sf_dir} no longer matches read_fixture_stream"
         )
     return drained
 
@@ -1187,7 +1203,7 @@ def streaming_epoch_log_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     if _input_rows(q) == 0:
         raise RuntimeError(
             "streaming_epoch_log_sink: the event stream read 0 rows — "
-            f"source layout under {sf_dir} no longer matches the reader"
+            f"source layout under {sf_dir} no longer matches read_fixture_stream"
         )
     shards = committed_epoch_shards(root)
     back = spark.read.schema("event_type string, value_cents long").json(
@@ -1218,9 +1234,6 @@ def _events_dir_with_sentinels(spark: SparkSession, sf_dir: str) -> str:
     The sentinel frame is derived FROM the fixture frame itself, so its
     physical ts type always matches whatever layout the round's fixture
     arrived with (nanos-as-long or micros — the round-2 type flip)."""
-    import glob as _glob
-    import shutil
-
     ensure_runtime_confs(spark)
 
     def build() -> Owned:
@@ -1232,17 +1245,21 @@ def _events_dir_with_sentinels(spark: SparkSession, sf_dir: str) -> str:
         # so a directory-layout fixture (the layout table_fingerprint
         # already supports) must be FLATTENED into root — one copy per part
         # file, listdir-sorted order preserved through ascending mtimes, all
-        # strictly before the sentinels' 10_000_000_000+ band.
+        # strictly before the sentinels' 10_000_000_000+ band.  The
+        # file-stream source orders by modification time: fixture first,
+        # then sentinel 0, then sentinel 1.
         if os.path.isdir(src):
-            parts = sorted(
-                f for f in os.listdir(src) if f.endswith(".parquet")
-            )
-            for j, name in enumerate(parts):
-                dest = os.path.join(root, f"events_{j:05d}.parquet")
-                shutil.copy(os.path.join(src, name), dest)
-                os.utime(dest, (0, 9_000_000_000 + j))
+            names = sorted(f for f in os.listdir(src) if f.endswith(".parquet"))
+            copies = [
+                (os.path.join(src, f), f"events_{j:05d}.parquet", 9_000_000_000 + j)
+                for j, f in enumerate(names)
+            ]
         else:
-            shutil.copy(src, os.path.join(root, "events.parquet"))
+            copies = [(src, "events.parquet", 9_999_999_999)]
+        for path, name, mtime in copies:
+            dest = os.path.join(root, name)
+            shutil.copy(path, dest)
+            os.utime(dest, (mtime, mtime))
         last = raw.orderBy(F.col("ts").desc()).limit(1)
         for i, days in enumerate((1, 2)):
             shift = (
@@ -1260,21 +1277,65 @@ def _events_dir_with_sentinels(spark: SparkSession, sf_dir: str) -> str:
                 F.lit(0.0).alias("value"),
                 F.lit("{}").alias("props"),
             ).select(raw.columns)
-            stage = os.path.join(root, "_stage")
-            sent.coalesce(1).write.parquet(stage)
-            (part,) = _glob.glob(os.path.join(stage, "part-*.parquet"))
-            dest = os.path.join(root, f"zz_sentinel_{i}.parquet")
-            shutil.copy(part, dest)
-            shutil.rmtree(stage)
-            # file-stream source orders by modification time: fixture first,
-            # then sentinel 0, then sentinel 1
-            os.utime(dest, (1 + i, 10_000_000_000 + i))
-        single = os.path.join(root, "events.parquet")
-        if os.path.exists(single):
-            os.utime(single, (0, 9_999_999_999))
+            _write_one_parquet(
+                sent,
+                os.path.join(root, f"zz_sentinel_{i}.parquet"),
+                10_000_000_000 + i,
+            )
         return Owned(root, dirs=(root,))
 
     return _SENTINEL_DIRS.get(spark, sf_dir, ("events",), build)
+
+
+def _sentinel_outer_join(spark: SparkSession, sf_dir: str, how: str) -> DataFrame:
+    """Purchases ``how``-joined to the same user's errors in the following
+    30 minutes, both sides streamed from the sentinel-augmented events
+    dir (``_events_dir_with_sentinels``).
+
+    All files (fixture + sentinels) drain in ONE data batch; the
+    watermark committed at its end clears every real event, and the
+    availableNow NO-DATA batch (noDataMicroBatches.enabled, default
+    true) then runs eviction under it — 2 batches total, measured 3.4 ->
+    2.4 s vs staggered 2-file triggers.  The final-band pytest pin
+    guards this: if a Spark upgrade stops running the no-data batch, the
+    pin goes red.
+
+    Sentinel rows are dropped AFTER the drain, never in the stream: an
+    in-stream user_id >= 0 filter gets pushed down into the parquet
+    scan, whose row-group stats then skip the all-sentinel files
+    entirely — the watermark operator never sees them and never
+    advances (observed: the last ~1.5 h of unmatched rows withheld
+    again).
+    """
+    root = _events_dir_with_sentinels(spark, sf_dir)
+    purchases, errors = _purchase_error_sides(
+        read_fixture_stream(spark, sf_dir, "events", root)
+    )
+    return purchases.join(
+        errors,
+        F.expr(
+            "p_user = e_user AND e_ts >= p_ts "
+            "AND e_ts <= p_ts + INTERVAL '30' MINUTE"
+        ),
+        how,
+    )
+
+
+def _attribution_join(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The left-outer attribution stream: every purchase with the id of
+    each same-user error in the following 30 minutes, or -1 when none
+    arrives — sentinel rows included (callers drop ``user_id < 0``
+    after the drain).  Drained by streaming_outer_join_attribution and,
+    with a kept checkpoint, by state_reader._outer_join_state_checkpoint.
+    """
+    return _sentinel_outer_join(spark, sf_dir, "leftOuter").select(
+        "purchase_id",
+        F.col("p_user").alias("user_id"),
+        # no-match sentinel -1 instead of NULL: a nullable bigint column
+        # coerces to float64 (NaN) on the driver's pandas path — the
+        # value-hash hazard of invariant 3
+        F.coalesce(F.col("error_id"), F.lit(-1)).cast("long").alias("error_id"),
+    )
 
 
 def streaming_outer_join_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1300,68 +1361,6 @@ def streaming_outer_join_attribution(spark: SparkSession, sf_dir: str) -> DataFr
     the range constraint); key partitioning is on user_id via
     BOUNDED_KEY_PARTITIONS like every stateful topology here.
     """
-    root = _events_dir_with_sentinels(spark, sf_dir)
-    # schema from the ORIGINAL fixture path — root holds flattened part
-    # files (events_NNNNN.parquet) when the fixture is a directory
-    schema = _source_schema(spark, os.path.join(sf_dir, "events.parquet"))
-    raw = (
-        spark.readStream.schema(schema)
-        .format("parquet")
-        .option("pathGlobFilter", "*.parquet")
-        # All files (fixture + sentinels) drain in ONE data batch; the
-        # watermark committed at its end clears every real event, and
-        # the availableNow NO-DATA batch (noDataMicroBatches.enabled,
-        # default true) then runs eviction under it — 2 batches total,
-        # measured 3.4 -> 2.4 s vs staggered 2-file triggers.  The
-        # final-band pytest pin guards this: if a Spark upgrade stops
-        # running the no-data batch, the pin goes red.
-        .load(root)
-    )
-    ts_type = schema["ts"].dataType.simpleString()
-    ts = (
-        F.timestamp_micros(F.expr("ts div 1000"))
-        if ts_type == "bigint"
-        else F.col("ts").cast("timestamp")
-    )
-    ev = raw.withColumn("ts", ts)
-    purchases = (
-        ev.filter(F.col("event_type") == "purchase")
-        .select(
-            F.col("event_id").alias("purchase_id"),
-            F.col("user_id").alias("p_user"),
-            F.col("ts").alias("p_ts"),
-        )
-        .withWatermark("p_ts", "1 hour")
-    )
-    errors = (
-        ev.filter(F.col("event_type") == "error")
-        .select(
-            F.col("event_id").alias("error_id"),
-            F.col("user_id").alias("e_user"),
-            F.col("ts").alias("e_ts"),
-        )
-        .withWatermark("e_ts", "1 hour")
-    )
-    # Sentinel rows are dropped AFTER the drain, not here: an in-stream
-    # user_id >= 0 filter gets pushed down into the parquet scan, whose
-    # row-group stats then skip the all-sentinel files entirely — the
-    # watermark operator never sees them and never advances (observed:
-    # the last ~1.5 h of unmatched rows withheld again).
-    joined = purchases.join(
-        errors,
-        F.expr(
-            "p_user = e_user AND e_ts >= p_ts "
-            "AND e_ts <= p_ts + INTERVAL '30' MINUTE"
-        ),
-        "leftOuter",
-    ).select(
-        "purchase_id",
-        F.col("p_user").alias("user_id"),
-        # no-match sentinel -1 instead of NULL: a nullable bigint column
-        # coerces to float64 (NaN) on the driver's pandas path — the
-        # value-hash hazard of invariant 3
-        F.coalesce(F.col("error_id"), F.lit(-1)).cast("long").alias("error_id"),
-    )
     # OUTER_JOIN_STATE_PARTITIONS: join state is WATERMARK-bounded (live
     # rows = arrival-rate x the ~1.5 h horizon the range condition +
     # delay admit), not corpus-bounded, so state stays small at any
@@ -1371,7 +1370,10 @@ def streaming_outer_join_attribution(spark: SparkSession, sf_dir: str) -> DataFr
     # 3.4 -> 2.5 s, flat below 4).  A production deployment sizes this
     # to horizon volume, which _drain_confs parameterizes.
     rows, _ = _drain_to_memory(
-        spark, joined, "append", partitions=OUTER_JOIN_STATE_PARTITIONS
+        spark,
+        _attribution_join(spark, sf_dir),
+        "append",
+        partitions=OUTER_JOIN_STATE_PARTITIONS,
     )
     return rows.where(F.col("user_id") >= 0)
 
@@ -1391,51 +1393,7 @@ def streaming_full_outer_reconcile(spark: SparkSession, sf_dir: str) -> DataFram
     bands on BOTH sides to drain (SCALE.md §6g); the -1 no-match
     sentinels keep the output schema atomic non-null bigints.
     """
-    root = _events_dir_with_sentinels(spark, sf_dir)
-    # schema from the ORIGINAL fixture path — root holds flattened part
-    # files (events_NNNNN.parquet) when the fixture is a directory
-    schema = _source_schema(spark, os.path.join(sf_dir, "events.parquet"))
-    raw = (
-        spark.readStream.schema(schema)
-        .format("parquet")
-        .option("pathGlobFilter", "*.parquet")
-        # one data batch + the no-data eviction batch (see
-        # streaming_outer_join_attribution's reader comment)
-        .load(root)
-    )
-    ts_type = schema["ts"].dataType.simpleString()
-    ts = (
-        F.timestamp_micros(F.expr("ts div 1000"))
-        if ts_type == "bigint"
-        else F.col("ts").cast("timestamp")
-    )
-    ev = raw.withColumn("ts", ts)
-    purchases = (
-        ev.filter(F.col("event_type") == "purchase")
-        .select(
-            F.col("event_id").alias("purchase_id"),
-            F.col("user_id").alias("p_user"),
-            F.col("ts").alias("p_ts"),
-        )
-        .withWatermark("p_ts", "1 hour")
-    )
-    errors = (
-        ev.filter(F.col("event_type") == "error")
-        .select(
-            F.col("event_id").alias("error_id"),
-            F.col("user_id").alias("e_user"),
-            F.col("ts").alias("e_ts"),
-        )
-        .withWatermark("e_ts", "1 hour")
-    )
-    joined = purchases.join(
-        errors,
-        F.expr(
-            "p_user = e_user AND e_ts >= p_ts "
-            "AND e_ts <= p_ts + INTERVAL '30' MINUTE"
-        ),
-        "fullOuter",
-    ).select(
+    joined = _sentinel_outer_join(spark, sf_dir, "fullOuter").select(
         F.coalesce(F.col("p_user"), F.col("e_user")).alias("user_id"),
         F.coalesce(F.col("purchase_id"), F.lit(-1)).cast("long").alias("purchase_id"),
         F.coalesce(F.col("error_id"), F.lit(-1)).cast("long").alias("error_id"),

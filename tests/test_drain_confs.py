@@ -6,6 +6,8 @@ and the streaming source-schema memo.
   checkpoint manager; the package has an exact number of start sites,
   and a ``writeStream…format("memory")`` chain appears only in
   ``_drain_to_memory`` and ``synthetic_stream_rollup``;
+- every fixture file stream is read by ``read_fixture_stream`` (AST
+  lint: ``readStream`` appears only there and in the synthetic stream);
 - no memory-sink temp view outlives the drain that made it;
 - the scope restores the caller's confs, serializes drains on one
   session, lets cloned sessions overlap, and refuses to start next to a
@@ -170,6 +172,52 @@ def test_memory_sinks_start_only_in_the_drain_helper():
          "synthetic_stream_rollup"),
         (os.path.join("mini_pandas_spark", "streaming", "windows.py"),
          "_drain_to_memory"),
+    ]
+
+
+def _read_stream_sites(tree: ast.AST) -> list[str]:
+    """Names of the functions that reach ``.readStream`` (code only:
+    a docstring or comment naming it does not count)."""
+    found = []
+
+    def visit(node: ast.AST, fn: str) -> None:
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+            fn = node.name
+        if isinstance(node, ast.Attribute) and node.attr == "readStream":
+            found.append(fn)
+        for child in ast.iter_child_nodes(node):
+            visit(child, fn)
+
+    visit(tree, "<module>")
+    return found
+
+
+def test_read_stream_lint_flags_each_reader():
+    src = textwrap.dedent(
+        """
+        def one(spark):
+            \"\"\"Streams via spark.readStream.\"\"\"
+            return spark.readStream.format("parquet").load(p)
+        def two(spark):
+            r = spark.readStream
+            return r, spark.readStream.schema(s).load(q)
+        """
+    )
+    assert _read_stream_sites(ast.parse(src)) == ["one", "two", "two"]
+
+
+def test_fixture_streams_go_through_the_one_reader():
+    """Every fixture file stream starts in ``read_fixture_stream``; the
+    synthetic stream is the one exception (its source is a registered
+    Python data source, not a fixture file)."""
+    sites = sorted(
+        (rel, fn) for rel, tree in _package_trees() for fn in _read_stream_sites(tree)
+    )
+    assert sites == [
+        (os.path.join("mini_pandas_spark", "sources", "synthetic.py"),
+         "synthetic_stream_rollup"),
+        (os.path.join("mini_pandas_spark", "streaming", "windows.py"),
+         "read_fixture_stream"),
     ]
 
 

@@ -4,6 +4,7 @@ state cleanup plumbing."""
 
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from mini_pandas_spark.streaming import read_events_stream
@@ -322,14 +323,20 @@ def test_outer_join_emits_final_watermark_band(spark):
     ), "final-band unmatched purchases were withheld by the drain"
 
 
-def test_sentinel_dir_supports_directory_layout_fixture(spark, tmp_path):
-    """Round-8 advice: _events_dir_with_sentinels must accept the
-    fixture layout where events.parquet is a DIRECTORY of part files
-    (the layout memo.table_fingerprint already supports) by flattening the
-    parts into the sentinel dir — and the outer-join drain over it must
-    equal the single-file-layout drain exactly."""
-    import os
-
+@pytest.mark.parametrize(
+    "name",
+    [
+        "streaming_outer_join_attribution",
+        "streaming_hourly_counts",
+        "streaming_dedup_events",
+    ],
+)
+def test_sentinel_dir_supports_directory_layout_fixture(spark, tmp_path, name):
+    """A fixture whose events.parquet is a DIRECTORY of part files (the
+    layout memo.table_fingerprint already supports) must drain the same
+    non-empty rows as the single-file layout: through the sentinel dir,
+    which flattens the parts (the outer join), and through
+    read_fixture_stream's plain events stream (the other two)."""
     from mini_pandas_spark.queries import queries
 
     SF = "/root/testdata/sf0.001"
@@ -340,13 +347,11 @@ def test_sentinel_dir_supports_directory_layout_fixture(spark, tmp_path):
         .repartition(3)
         .write.parquet(os.path.join(sfd, "events.parquet"))
     )
-    q = queries()["streaming_outer_join_attribution"]
-    base = {
-        (r.purchase_id, r.user_id, r.error_id) for r in q(spark, SF).collect()
-    }
-    got = {
-        (r.purchase_id, r.user_id, r.error_id) for r in q(spark, sfd).collect()
-    }
+    q = queries()[name]
+    base = sorted(tuple(r) for r in q(spark, SF).collect())
+    got = sorted(tuple(r) for r in q(spark, sfd).collect())
+    assert base, f"{name} drained no rows from the single-file fixture"
+    assert len(got) == len(base)
     assert got == base
 
 

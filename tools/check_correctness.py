@@ -11,10 +11,13 @@ Usage: python tools/check_correctness.py [query ...]
 is ~15 min and growing) sweeps only queries plausibly affected by the
 diff against <rev>: queries whose implementing module changed, plus
 queries whose register() block in queries.py changed.  A diff touching
-shared plumbing (sources/, functions.py, session.py, memo.py, frame.py,
-plans/) falls back to the FULL sweep — selection is only ever an
-over-approximation, never a shortcut past shared-code changes.  The
-full no-argument sweep remains the round gate.
+shared plumbing falls back to the FULL sweep.  Shared plumbing is
+sources/, functions/, session.py, memo.py, frame.py, plans/, and any
+operators/, streaming/ or multimodal/ module another package module
+imports (queries.py, the registry, does not count; a package
+``__init__`` passes its importers on to the modules it re-exports) —
+selection is only ever an over-approximation, never a shortcut past
+shared-code changes.  The full no-argument sweep remains the round gate.
 """
 
 from __future__ import annotations
@@ -112,6 +115,53 @@ def _registration_blocks(src: str) -> dict[str, str]:
     return blocks
 
 
+def _importers(repo: str) -> dict[str, set[str]]:
+    """Package module -> the package modules importing it, as repo-relative
+    paths, read from every module's import statements (queries.py left
+    out).  ``from .pkg import name`` counts as importing ``pkg/__init__.py``
+    and, when ``name`` is a submodule, ``pkg/name.py``."""
+    import ast
+
+    found: dict[str, set[str]] = {}
+    for base, _, files in os.walk(os.path.join(repo, "mini_pandas_spark")):
+        for name in files:
+            if not name.endswith(".py"):
+                continue
+            rel = os.path.relpath(os.path.join(base, name), repo)
+            if rel == "mini_pandas_spark/queries.py":
+                continue
+            with open(os.path.join(repo, rel)) as fh:
+                tree = ast.parse(fh.read())
+            here = os.path.dirname(rel).split(os.sep)
+            for node in ast.walk(tree):
+                if isinstance(node, ast.ImportFrom):
+                    parts = (node.module or "").split(".") if node.module else []
+                    if node.level:
+                        parts = here[: len(here) - node.level + 1] + parts
+                    mod = "/".join(parts)
+                    targets = [mod] + [f"{mod}/{a.name}" for a in node.names]
+                elif isinstance(node, ast.Import):
+                    targets = [a.name.replace(".", "/") for a in node.names]
+                else:
+                    continue
+                for t in targets:
+                    for cand in (f"{t}.py", f"{t}/__init__.py"):
+                        if cand != rel and os.path.isfile(os.path.join(repo, cand)):
+                            found.setdefault(cand, set()).add(rel)
+    return found
+
+
+def _is_imported(rel: str, importers: dict[str, set[str]], seen=frozenset()) -> bool:
+    """True if a package module other than queries.py imports ``rel``,
+    directly or through a package ``__init__`` that re-exports it."""
+    for imp in importers.get(rel, ()):
+        if not imp.endswith("/__init__.py"):
+            return True
+        if imp not in seen and _is_imported(imp, importers, seen | {rel}):
+            return True
+    return False
+
+
 def _changed_since(rev: str, qs: dict) -> set[str] | None:
     """Names affected by the diff vs ``rev``; None ⇒ run the full sweep
     (shared plumbing changed, or the diff could not be read)."""
@@ -135,9 +185,14 @@ def _changed_since(rev: str, qs: dict) -> set[str] | None:
     op_prefixes = ("mini_pandas_spark/operators/",
                    "mini_pandas_spark/streaming/",
                    "mini_pandas_spark/multimodal/")
+    importers = _importers(repo)
     for f in changed:
         if f != "mini_pandas_spark/queries.py" and not f.startswith(op_prefixes):
             print(f"note: shared file {f} changed; running FULL sweep")
+            return None
+        if _is_imported(f, importers):
+            print(f"note: {f} changed and other modules import it "
+                  f"({' '.join(sorted(importers[f]))}); running FULL sweep")
             return None
     selected: set[str] = set()
     changed_set = set(changed)
